@@ -3,7 +3,7 @@
 CollapseProject merges adjacent projections and re-inlines an expensive
 expression into EVERY downstream column that references it — a signature
 array extracted into K columns recomputes the signature K times; the
-array-native stage1's sort chains exploded to 898 copies of one
+former array-HOF stage1's sort chains exploded to 898 copies of one
 array_sort.  A `repartition()` stops the collapse but costs a full
 shuffle.  `inline(array(struct(...)))` is a Generate node: CollapseProject
 cannot merge through it, the generator expressions evaluate exactly once

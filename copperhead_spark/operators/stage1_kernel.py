@@ -1,33 +1,28 @@
-"""Arrow-vectorized stage-1 jagged front half (guide §4.2).
+"""Arrow-vectorized stage-1 jagged front half.
 
-The array-native stage1 (pipeline.stage1_arrays) runs its per-object
-work — muon selection + FSR dereference, the two-muon opposite-sign
-event cut, pt ordering, jet selection + dR cleaning, top-2 extraction —
-as Catalyst array higher-order functions.  HOF lambdas are interpreted
-per element (no whole-stage codegen inside ``transform``/``filter``/
-``exists``), and the r12/r13 stage decomposition measured that
-interpretation at ~60% of the pipeline's quiet-window CPU.  This module
-is the same computation as ONE ``mapInArrow`` pass: list offsets +
-flattened struct children come in as contiguous Arrow buffers, every
-step above is a handful of NumPy vector ops over them, and only the
-flat per-event columns come back.
+pipeline.stage1_arrays runs the per-object work of stage 1 here — muon
+selection + FSR dereference, the two-muon opposite-sign event cut, pt
+ordering, jet selection + dR cleaning, top-2 extraction — as ONE
+``mapInArrow`` pass: list offsets + flattened children come in as
+contiguous Arrow buffers, every step above is a handful of NumPy vector
+ops over them, and only the flat per-event columns come back.  (Catalyst
+array higher-order functions, the JVM-only way to express this, are
+interpreted per element; the measured cost was ~60% of the pipeline's
+CPU.)
 
-Bit-exactness (the reason this swap is legal against the unchanged
-DuckDB oracles): the jagged front half contains NO transcendentals —
-only IEEE-754 +,-,*,  comparisons, ``floor`` and integer counting, which
-NumPy and the JVM evaluate identically double-for-double.  All trig
-(COS/SIN/EXP/LN in the pair kinematics) stays in the codegen'd JVM tail
-(pipeline._derive_and_label), untouched.  Equality with the HOF plan is
-asserted exactly in tests (tests/test_pipeline.py, test_round13.py) and
-by the oracle rows of every e2e consumer.
+Bit-exactness (why the DuckDB oracles of every stage-1 consumer match
+exactly): this front half contains NO transcendentals — only IEEE-754
++,-,*, comparisons, ``floor`` and integer counting, which NumPy and the
+JVM evaluate identically double-for-double.  All trig (COS/SIN/EXP/LN
+in the pair kinematics) stays in the codegen'd JVM tail
+(pipeline._derive_and_label).  tests/test_pipeline.py checks the output
+against an independent pandas mirror of the spec, exactly on the
+transcendental-free columns.
 
-Scale shape: identical to the HOF plan — a pure map over the event
-stream (zero shuffles), one JVM->Python->JVM Arrow crossing per task.
-Only the consumed columns cross (explicit select below), batches are
-columnar both ways, and the per-batch kernel is allocation-light.  The
-HOF plan remains available (pipeline.stage1_arrays(kernel=False)) as
-the no-Python-boundary variant; COPPERHEAD_STAGE1=hof flips the default
-back without code changes.
+Scale shape: a pure map over the event stream (zero shuffles), one
+JVM->Python->JVM Arrow crossing per task.  Only the consumed columns
+cross (explicit select below), batches are columnar both ways, and the
+per-batch kernel is allocation-light.
 """
 
 from __future__ import annotations
@@ -250,14 +245,15 @@ _JET_IN = ("pt", "eta", "phi", "mass", "qgl", "jetId")
 
 def stage1_flat_arrow(ev: DataFrame) -> DataFrame:
     """events (post HLT/flag filter) -> flat per-event table, one
-    mapInArrow pass; bit-identical to the HOF front half.
+    mapInArrow pass.
 
     The Python boundary ships PRIMITIVE arrays (``Muon.pt`` etc. —
     ``GetArrayStructFields`` is whole-stage-codegen'd JVM-side), not the
     array<struct> columns: list<double> crosses Arrow near-zero-copy,
     while array-of-struct pays a per-element assembly on the JVM side
-    (measured: the struct form cost MORE CPU than the interpreted HOFs
-    it replaced; the primitive form is what made the kernel a win)."""
+    (measured: the struct form cost MORE CPU than the interpreted
+    array-HOF plan it replaced; the primitive form is what made the
+    kernel a win)."""
     src = ev.select(
         *_BASE,
         *[F.col(f"Muon.{f}").alias(f"mu_{f}") for f in _MU_IN],

@@ -9,20 +9,27 @@ output = flat wide table partitionable by dataset; stage2 output = the
 histogram table of FIXTURES.md §F3) but each stage is ONE lazy plan — no
 per-chunk Python loops, no pickled intermediate state.
 
-Reference walk-through being mirrored (citations into /root/reference):
- - HLT/flag filter          processor.py:146-156,234-235
- - FSR recovery (idx join)  stage1/corrections/fsr_recovery.py:6-13
- - muon selection           processor.py:243-249
- - nmuons + opposite sign   processor.py:252-260
- - leading/subleading pair  processor.py:295-318
- - dimuon kinematics        stage1/muons.py:6-71; python/math_tools.py:5-42
- - jet selection + dR clean processor.py:561-577,634-641
- - njets / top-2 jets / jj  processor.py:649-667; stage1/jets.py:22-147
- - muon SF weights          stage1/corrections/lepton_sf.py; weights.py
- - region labels            processor.py:471-478
- - channel cascade          stage2/categorizer.py:1-23
- - histograms               stage2/histogrammer.py:28-120
- - yields/templates         stage3/make_templates.py:197-207
+Stage 1 is one path, stage1_arrays: a JVM HLT/flag filter, then the
+transcendental-free jagged front half as one Arrow/NumPy mapInArrow
+kernel (operators/stage1_kernel.py, "kernel" below), then the trig-
+bearing tail as codegen'd JVM projections (_derive_and_label, "tail").
+
+Reference walk-through being mirrored (paths in the reference
+copperhead repository):
+ - HLT/flag filter          processor.py:146-156,234-235   stage1_arrays
+ - FSR recovery (idx deref) stage1/corrections/fsr_recovery.py:6-13  kernel
+ - muon selection           processor.py:243-249           kernel
+ - nmuons + opposite sign   processor.py:252-260           kernel
+ - leading/subleading pair  processor.py:295-318           kernel
+ - jet selection + dR clean processor.py:561-577,634-641   kernel
+ - njets / top-2 jets       processor.py:649-667           kernel
+ - dimuon / jj kinematics   stage1/muons.py:6-71; stage1/jets.py:22-147;
+                            python/math_tools.py:5-42      tail
+ - muon SF weights          stage1/corrections/lepton_sf.py; weights.py  tail
+ - region labels            processor.py:471-478           tail
+ - channel cascade          stage2/categorizer.py:1-23     channel_case
+ - histograms               stage2/histogrammer.py:28-120  stage2*
+ - yields/templates         stage3/make_templates.py:197-207  stage3
 """
 
 from __future__ import annotations
@@ -30,15 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from copperhead_spark.operators.aggregates import sign_product
-from copperhead_spark.operators.barrier import codegen_barrier
 from copperhead_spark.operators.histogram import histogram
-from copperhead_spark.operators.jagged import (
-    dr_clean_anti_join,
-    explode_collection,
-    top2_pivot,
-    xref_join,
-)
+from copperhead_spark.operators.stage1_kernel import stage1_flat_arrow
 
 MU_MASS = 0.105658
 TWO_PI = 6.283185307179586
@@ -107,78 +107,11 @@ _MU_SF = (
 )
 
 
-def stage1(events: DataFrame) -> DataFrame:
-    """Raw jagged events -> flat wide per-event table (one lazy plan)."""
-    ev = events.filter(F.col("HLT_IsoMu24") & F.col("Flag_goodVertices"))
-
-    # --- muons: explode -> FSR recovery -> selection -------------------
-    muons = explode_collection(ev, "Muon")
-    fsr = explode_collection(ev, "FsrPhoton")
-    muons = xref_join(muons, fsr, "fsrPhotonIdx", ("pt",), prefix="fsr_")
-    muons = muons.withColumn(
-        "pt_corr", F.col("pt") + F.coalesce(F.col("fsr_pt"), F.lit(0.0)) * 0.1
-    )
-    sel_mu = muons.filter(
-        (F.col("pt_corr") > 20)
-        & (F.abs(F.col("eta")) < 2.4)
-        & (F.col("pfRelIso04_all") < 0.25)
-        & F.col("mediumId")
-    )
-
-    per_event = sel_mu.groupBy("event").agg(
-        F.count("*").alias("nmuons"),
-        sign_product(F.col("charge")).alias("mm_charge"),
-    )
-
-    pair = top2_pivot(
-        sel_mu,
-        order_by=[F.col("pt_corr").desc(), F.col("idx").asc()],
-        fields=("pt_corr", "eta", "phi", "charge", "pfRelIso04_all"),
-        prefixes=("mu1_", "mu2_"),
-    ).withColumnRenamed("mu1_pt_corr", "mu1_pt").withColumnRenamed(
-        "mu2_pt_corr", "mu2_pt"
-    )
-
-    # --- jets: selection + dR cleaning vs selected muons ---------------
-    jets = explode_collection(ev, "Jet")
-    sel_jet = jets.filter(
-        (F.col("pt") > 25) & (F.abs(F.col("eta")) < 4.7) & (F.col("jetId") >= 2)
-    )
-    clean_jet = dr_clean_anti_join(sel_jet, sel_mu.select("event", "eta", "phi"), 0.4)
-    jet_counts = clean_jet.groupBy("event").agg(F.count("*").alias("njets"))
-    jet_pair = top2_pivot(
-        clean_jet,
-        order_by=[F.col("pt").desc(), F.col("idx").asc()],
-        fields=("pt", "eta", "phi", "mass", "qgl"),
-        prefixes=("jet1_", "jet2_"),
-        require=1,
-    )
-
-    # --- assemble the event table --------------------------------------
-    flat = (
-        ev.select("event", "run", "genWeight", "MET_pt", "Pileup_nTrueInt")
-        .join(per_event, "event")
-        .join(pair, "event")
-        .filter((F.col("nmuons") == 2) & (F.col("mm_charge") == -1))
-        .join(jet_counts, "event", "left")
-        .join(jet_pair, "event", "left")
-        .withColumn("njets", F.coalesce(F.col("njets"), F.lit(0)))
-    )
-
-    return _derive_and_label(flat)
-
-
 def _derive_and_label(flat: DataFrame) -> DataFrame:
-    """Shared stage-1 tail: pair kinematics, region labels, weight ledger
-    (identical for the exploded-child and array-native front halves).
-
-    The codegen_barrier is load-bearing: fused with the array-native
-    front half, this tail's kinematics push the single whole-stage span
-    past janino's 64 KB method limit and the ENTIRE pipeline silently
-    ran interpreted (discovered r8 by the fallback=false preflight gate;
-    see operators/barrier.codegen_barrier).  Splitting here keeps both
-    spans compiled."""
-    flat = codegen_barrier(flat, "cgb_derive")
+    """Stage-1 tail: pair kinematics, region labels, weight ledger.  The
+    trig (COS/SIN/EXP/LN) stays in codegen'd JVM expressions: NumPy and
+    the JVM's libm can differ in the last ulp, and the oracles that
+    consume this table compare bit for bit."""
     flat = _pair_kinematics(flat, "mu1_", "mu2_", "dimuon_", MU_MASS, MU_MASS)
     flat = _pair_kinematics_jets(flat)
 
@@ -218,160 +151,18 @@ def _derive_and_label(flat: DataFrame) -> DataFrame:
     )
 
 
-def _once(df: DataFrame, *exprs: str) -> DataFrame:
-    """Shuffle-free optimizer barrier (operators/barrier.py): without it
-    CollapseProject re-inlines the array chains into every referencing
-    column (measured: 898 copies of one array_sort in this plan)."""
-    from copperhead_spark.operators.barrier import project_once
+def stage1_arrays(events: DataFrame) -> DataFrame:
+    """Raw jagged events -> flat wide per-event table, with ZERO shuffles.
 
-    return project_once(df, *exprs)
-
-
-def stage1_arrays(events: DataFrame, kernel: bool | None = None) -> DataFrame:
-    """stage1 with ZERO shuffles: every jagged operation — FSR index
-    dereference, object selection, charge product, pt-ordered top-2,
-    dR cleaning against selected muons — runs as array higher-order
-    functions on the array-of-struct columns, entirely inside
-    whole-stage codegen.  Same results as stage1() (asserted in
-    tests/test_pipeline.py); the exploded-child operators remain the
-    general path when children outgrow single-row arrays, but for
-    NanoAOD-shaped multiplicities (<= tens of objects/event) the
-    array-native plan turns stage 1 from ~13 event-key shuffles into a
-    pure map — at 100 TB that is the difference between a network-bound
-    and a scan-bound job (only stage 2's histogram shuffles).
-
-    ``kernel`` (r13, guide §4.2): the jagged front half's HOF lambdas
-    are interpreted per element — measured at ~60% of the pipeline's
-    quiet-window CPU.  By default it now runs as ONE Arrow/NumPy
-    mapInArrow pass (operators/stage1_kernel.py, bit-identical: the
-    front half is transcendental-free), still a pure map with zero
-    shuffles.  ``kernel=False`` (or COPPERHEAD_STAGE1=hof) keeps the
-    all-JVM HOF plan — the no-Python-boundary variant and the equality
-    witness in tests."""
-    import os
-
-    if kernel is None:
-        # r13 gate passed: bit-exact vs the HOF plan (tests/test_round13),
-        # all six stage1-consuming declared queries max_abs_diff=0 at
-        # sf0.01 AND sf0.1, interleaved A/B at 1M events wall -24% /
-        # CPU -14%.  COPPERHEAD_STAGE1=hof restores the all-JVM plan.
-        kernel = os.environ.get("COPPERHEAD_STAGE1", "arrow") != "hof"
+    The HLT/flag filter runs in the JVM; the jagged front half (FSR
+    index dereference, muon selection, two-muon opposite-sign cut,
+    pt-ordered top-2, jet selection + dR cleaning against the selected
+    muons) runs as ONE Arrow/NumPy mapInArrow pass
+    (operators/stage1_kernel.py); the trig-bearing tail stays in the
+    codegen'd JVM (_derive_and_label).  The plan is a pure map over the
+    event stream: stage 2's histogram exchange is its only shuffle."""
     ev = events.filter(F.col("HLT_IsoMu24") & F.col("Flag_goodVertices"))
-    if kernel:
-        from copperhead_spark.operators.stage1_kernel import stage1_flat_arrow
-
-        return _derive_and_label(stage1_flat_arrow(ev))
-
-    dphi = "((({a}) - ({b})) - {tp} * FLOOR(((({a}) - ({b})) + {p}) / {tp}))"
-    dphi_jm = dphi.format(a="j.phi", b="m.phi", tp=TWO_PI, p=PI)
-    dr2 = f"((j.eta - m.eta) * (j.eta - m.eta) + {dphi_jm} * {dphi_jm})"
-    by_pt = (
-        "(a, b) -> CASE WHEN a.{pt} > b.{pt} THEN -1 WHEN a.{pt} < b.{pt} THEN 1 "
-        "WHEN a.idx < b.idx THEN -1 WHEN a.idx > b.idx THEN 1 ELSE 0 END"
-    )
-
-    base = ["event", "run", "genWeight", "MET_pt", "Pileup_nTrueInt"]
-
-    # FSR recovery (fsr_recovery.py:6-13) as an index dereference instead
-    # of the (event, idx) equi-join on exploded children; then the full
-    # muon selection (processor.py:243-249) as an array filter.
-    # r12 reorder: the raw-field cuts (eta / iso / mediumId) run FIRST,
-    # so the FSR dereference + struct build only touch surviving muons
-    # (array HOFs are interpreted expressions — per-element work is the
-    # cost driver).  Exact-equivalent: those cuts read fields the
-    # transform does not change, filter() preserves element order so the
-    # idx tiebreak ranks identically, and fsrPhotonIdx indexes the
-    # UNfiltered FsrPhoton array.  mediumId is consumed by the filter
-    # and dropped from the struct (nothing downstream reads it).
-    stage_a = _once(
-        ev,
-        *base,
-        "Jet",
-        """filter(
-             transform(
-               filter(Muon, m -> abs(m.eta) < 2.4
-                             AND m.pfRelIso04_all < 0.25 AND m.mediumId),
-               (m, i) -> struct(
-                 m.pt + coalesce(IF(m.fsrPhotonIdx >= 0,
-                                    try_element_at(FsrPhoton, m.fsrPhotonIdx + 1).pt,
-                                    CAST(NULL AS DOUBLE)), 0.0) * 0.1 AS pt_corr,
-                 m.eta AS eta, m.phi AS phi, m.charge AS charge,
-                 m.pfRelIso04_all AS pfRelIso04_all,
-                 i AS idx)),
-             m -> m.pt_corr > 20)
-        """.replace("\n", " ")
-        + " AS mu_sel",
-    )
-
-    # the two-muon opposite-sign cut (exact +/-1 product = parity of
-    # negatives, processor.py:260) drops ~95% of events BEFORE any
-    # sorting or jet work
-    selected = stage_a.filter(
-        F.expr(
-            "size(mu_sel) = 2 AND "
-            "aggregate(mu_sel, 0, (acc, m) -> acc + IF(m.charge < 0, 1, 0)) % 2 = 1"
-        )
-    )
-
-    stage_b = _once(
-        selected,
-        *base,
-        "CAST(size(mu_sel) AS BIGINT) AS nmuons",
-        "-1 AS mm_charge",
-        f"array_sort(mu_sel, {by_pt.format(pt='pt_corr')}) AS mu_sorted",
-        # jet selection + dR cleaning vs the SELECTED muons
-        # (processor.py:561-577,634-641): quantified NOT EXISTS as a
-        # nested array predicate.  r12 reorder (same rationale and
-        # equivalence argument as the muon block): raw-field cuts first,
-        # struct build only for survivors; jetId is filter-only and
-        # dropped from the struct.
-        f"""filter(
-              transform(
-                filter(Jet, j -> j.pt > 25 AND abs(j.eta) < 4.7
-                              AND j.jetId >= 2),
-                (j, i) -> struct(
-                       j.pt AS pt, j.eta AS eta, j.phi AS phi,
-                       j.mass AS mass, j.qgl AS qgl,
-                       i AS idx)),
-              j -> NOT exists(mu_sel, m -> {dr2} < 0.16))
-         """.replace("\n", " ")
-        + " AS jet_clean",
-    )
-
-    stage_c = _once(
-        stage_b,
-        *base,
-        "nmuons",
-        "mm_charge",
-        "mu_sorted",
-        "CAST(size(jet_clean) AS BIGINT) AS njets",
-        f"array_sort(jet_clean, {by_pt.format(pt='pt')}) AS jet_sorted",
-    )
-
-    def _obj(src: str, n: int, prefix: str, fields: list[tuple[str, str]]) -> list[str]:
-        return [
-            f"try_element_at({src}, {n}).{f} AS {prefix}{alias}" for f, alias in fields
-        ]
-
-    mu_fields = [
-        ("pt_corr", "pt"), ("eta", "eta"), ("phi", "phi"),
-        ("charge", "charge"), ("pfRelIso04_all", "pfRelIso04_all"),
-    ]
-    jet_fields = [
-        ("pt", "pt"), ("eta", "eta"), ("phi", "phi"),
-        ("mass", "mass"), ("qgl", "qgl"),
-    ]
-    flat = stage_c.selectExpr(
-        *base,
-        "nmuons",
-        "mm_charge",
-        *_obj("mu_sorted", 1, "mu1_", mu_fields),
-        *_obj("mu_sorted", 2, "mu2_", mu_fields),
-        "njets",
-        *_obj("jet_sorted", 1, "jet1_", jet_fields),
-        *_obj("jet_sorted", 2, "jet2_", jet_fields),
-    )
-    return _derive_and_label(flat)
+    return _derive_and_label(stage1_flat_arrow(ev))
 
 
 def _pair_kinematics_jets(flat: DataFrame) -> DataFrame:

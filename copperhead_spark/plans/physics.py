@@ -132,7 +132,7 @@ def pipeline_hmm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy plan): jagged events with Muon/Jet/FsrPhoton collections flow
     through HLT/flag filters, FSR recovery, muon selection, opposite-sign
     pairing, dR jet cleaning, region labels and the weight ledger
-    (stage1_arrays — zero shuffles, pure array HOFs inside codegen), then
+    (stage1_arrays — zero shuffles, one Arrow kernel pass), then
     the region x channel x variation weighted histogram (stage2_variations
     — the single event-data shuffle).  Input is the deterministic
     executor-side fixture, so the result is stable across runs/partitions

@@ -1795,8 +1795,7 @@ def pipeline_root_to_fit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tail, the channel CASE + bin + exact-sum partial agg push the
     # single whole-stage span past janino's 64 KB method limit and the
     # anchor pass would silently run interpreted (caught at sf0.1 under
-    # codegen.fallback=false — the r8 failure mode, same fix as
-    # pipeline._derive_and_label)
+    # codegen.fallback=false — the r8 failure mode)
     from copperhead_spark.operators.barrier import codegen_barrier
 
     bin_col = bin_index(F.col("dimuon_mass"), _TH1_LO, _TH1_HI, _TH1_NBINS)

@@ -204,10 +204,10 @@ def test_no_codegen_compile_fallback_in_heavy_expression_queries(spark, sf_dir):
         "ml_gbdt_inference",       # 2 folds x 8 unrolled depth-3 trees
         "ml_calibration_bins",     # margin twice + sigmoid in one project
         "pipeline_pretrain_corpus_e2e",  # six fused stages, widest plan
-        # the ACTUAL r7 offender: stage1 HOFs + derive kinematics fused
-        # past janino's 64 KB method limit — ran interpreted until the
-        # codegen_barrier in pipeline._derive_and_label (r8) split the
-        # span (2.8x faster at 10M events once actually compiled)
+        # the r7 offender (stage-1 array HOFs + derive kinematics fused
+        # past janino's 64 KB method limit); now the mapInArrow kernel
+        # ends the span, and this keeps the kinematics tail + stage-2
+        # histogram span compiling
         "pipeline_hmm_histogram",
     ]
     qs = all_queries()

@@ -69,64 +69,56 @@ def test_no_reevaluated_expensive_subtrees(spark, name, max_py, max_scans):
     )
 
 
-def test_stage1_arrow_kernel_bit_exact(spark):
-    """r13 session-2: the Arrow/NumPy stage-1 front half must be
-    BIT-exact vs the HOF plan (same rows, same doubles, same schema) —
-    it feeds oracle-hashed e2e queries.  The front half is
-    transcendental-free, so exact equality is the contract, not a
-    tolerance."""
-    import numpy as np
-
-    from copperhead_spark.fixtures import events_fixture_distributed
-    from copperhead_spark.pipeline import stage1_arrays
-
-    ev = events_fixture_distributed(spark, 20000)
-    a = stage1_arrays(ev, kernel=False).toPandas().sort_values(
-        "event").reset_index(drop=True)
-    b = stage1_arrays(ev, kernel=True).toPandas().sort_values(
-        "event").reset_index(drop=True)
-    sa = stage1_arrays(ev, kernel=False).schema
-    sb = stage1_arrays(ev, kernel=True).schema
-    assert [(f.name, f.dataType) for f in sa] == [
-        (f.name, f.dataType) for f in sb]
-    assert len(a) == len(b) > 100
-    for col in a.columns:
-        x, y = a[col].to_numpy(), b[col].to_numpy()
-        if x.dtype.kind == "f":
-            same = (x == y) | (np.isnan(x) & np.isnan(y))
-        else:
-            same = x == y
-        assert np.asarray(same).all(), col
-
-
 def test_stage1_arrow_kernel_null_jets(spark):
     """jet1_*/jet2_* must be NULL (not NaN, not 0) when njets < 1/2 —
     Spark treats NaN > x as TRUE, so a NaN leak would flip the vbf
     channel cascade.  The F1 fixture's survivors always carry >= 2 clean
-    jets, so this uses a hand-built 0/1/2-jet fixture (and checks the
-    HOF arm agrees)."""
+    jets, so this uses a hand-built 0/1/2-jet fixture, plus the inputs
+    that must yield NO row (one muon, no muons, a same-sign pair), an
+    empty frame, and partitions with no survivors: each gives the right
+    row count under the full schema."""
+    import pandas as pd
+
     from copperhead_spark.fixtures import EVENT_SCHEMA
     from copperhead_spark.pipeline import stage1_arrays
 
     mu = [(50.0, 0.5, 0.1, 1, 0.1, True, -1),
           (40.0, -0.5, 2.0, -1, 0.1, True, -1)]
+    same_sign = [mu[0], (40.0, -0.5, 2.0, 1, 0.1, True, -1)]
     jet = (120.0, 3.0, -2.0, 10.0, 2, 0.5)
     jet2 = (80.0, -3.0, 1.0, 8.0, 6, 0.2)
+
+    def row(event, muons, jets):
+        return (1, event, 1.0, True, True, 30.0, 20.0, muons, jets, [])
+
     rows = [
-        (1, 100, 1.0, True, True, 30.0, 20.0, mu, [], []),
-        (1, 101, 1.0, True, True, 30.0, 20.0, mu, [jet], []),
-        (1, 102, 1.0, True, True, 30.0, 20.0, mu, [jet, jet2], []),
+        row(100, mu, []),
+        row(101, mu, [jet]),
+        row(102, mu, [jet, jet2]),
+        row(103, mu[:1], [jet, jet2]),
+        row(104, [], [jet, jet2]),
+        row(105, same_sign, [jet, jet2]),
     ]
     ev = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
-    for k in (True, False):
-        flat = (stage1_arrays(ev, kernel=k).toPandas()
-                .sort_values("event").reset_index(drop=True))
-        assert list(flat.njets) == [0, 1, 2], k
-        assert flat.loc[0, ["jet1_pt", "jet2_pt", "jet1_qgl"]].isna().all(), k
-        assert flat.loc[1, "jet1_pt"] == 120.0 and flat.loc[
-            1, ["jet2_pt", "jet2_mass"]].isna().all(), k
-        assert flat.loc[2, "jet1_pt"] == 120.0 \
-            and flat.loc[2, "jet2_pt"] == 80.0, k
+    flat = (stage1_arrays(ev).toPandas()
+            .sort_values("event").reset_index(drop=True))
+    assert len(flat.columns) == 44
+    assert list(flat.event) == [100, 101, 102]
+    assert list(flat.njets) == [0, 1, 2]
+    assert flat.loc[0, ["jet1_pt", "jet2_pt", "jet1_qgl"]].isna().all()
+    assert flat.loc[1, "jet1_pt"] == 120.0 and flat.loc[
+        1, ["jet2_pt", "jet2_mass"]].isna().all()
+    assert flat.loc[2, "jet1_pt"] == 120.0 and flat.loc[2, "jet2_pt"] == 80.0
+
+    empty = stage1_arrays(
+        spark.createDataFrame([], schema=EVENT_SCHEMA)).toPandas()
+    assert list(empty.columns) == list(flat.columns) and len(empty) == 0
+
+    # 8 partitions over 6 events: some are empty, others hold only
+    # events the kernel drops
+    spread = (stage1_arrays(ev.repartition(8, "event")).toPandas()
+              .sort_values("event").reset_index(drop=True))
+    pd.testing.assert_frame_equal(spread, flat)
 
 
 def test_lsh_pairs_values_unchanged(spark):

@@ -197,7 +197,7 @@ def test_url_canonicalize_collapses_variants(spark, tmp_path):
 
 def test_codegen_barrier_names_unique_per_call(spark):
     """Observed-metric names must be unique per query: composing two
-    barriered subplans (e.g. a union of two stage1 pipelines) would
+    barriered subplans (e.g. a union of two fit-anchor passes) would
     raise DUPLICATED_OBSERVED_METRICS if codegen_barrier reused a name.
     The module counter guarantees uniqueness."""
     from copperhead_spark.operators.barrier import codegen_barrier
@@ -205,10 +205,3 @@ def test_codegen_barrier_names_unique_per_call(spark):
     df = spark.range(5).selectExpr("id * 2 AS a")
     u = codegen_barrier(df).union(codegen_barrier(df))
     assert u.count() == 10
-    from copperhead_spark import pipeline as P
-    from copperhead_spark.fixtures import events_fixture
-
-    ev = events_fixture(spark, 200)
-    one = P.stage1_arrays(ev).select("event")
-    both = one.union(P.stage1_arrays(ev).select("event"))
-    assert both.count() == 2 * one.count()
