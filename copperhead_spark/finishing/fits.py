@@ -9,16 +9,19 @@ per (label, channel, category) by minimum chi2
 Here: numpy-only chi2 fits over the *collected* histogram table (the
 heavy lifting — binning — already happened distributed in stage 2; a fit
 consumes O(nbins) numbers, exactly like the reference's per-category
-RooFit calls).  Linear-in-coefficients families (chebyshev, bernstein,
-power series) solve exactly via weighted least squares; the
-Breit-Wigner family profiles its linear normalization and golden-section
-searches the width.  No scipy dependency.
+RooFit calls), run serially on the driver.  Linear-in-coefficients
+families (chebyshev, bernstein) solve exactly via weighted least
+squares.  The nonlinear lineshapes (bwZ, bwZredux, bwGamma, doubleCB)
+share one core: the linear norm is profiled in closed form and the shape
+parameters are found by cyclic coordinate descent with golden-section
+line searches, stopping at the sweep that changes no parameter.
+finishing/nll.py runs the same descent on unbinned likelihoods.  No
+scipy dependency.
 """
 
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -74,45 +77,48 @@ def fit_bernstein(x, y, sigma, degree: int = 3) -> FitResult:
     return FitResult(f"bernstein{degree}", coef, chi2, len(x) - (degree + 1), yhat)
 
 
-def _bw_shape(x: np.ndarray, mass: float, width: float) -> np.ndarray:
-    return width / ((x * x - mass * mass) ** 2 + mass * mass * width * width)
-
-
-def fit_bwz(x, y, sigma, mass: float = 91.1876) -> FitResult:
-    """Breit-Wigner (Z lineshape, fit_models.py bwZ): profile the linear
-    norm, golden-section the width — robust, derivative-free."""
-
-    def chi2_of(width: float) -> tuple[float, np.ndarray]:
-        basis = _bw_shape(x, mass, width)[:, None]
-        coef, chi2, yhat = _weighted_lstsq(basis, y, sigma)
-        return chi2, np.array([coef[0], width]), yhat
-
-    lo, hi = 0.1, 60.0
+def _golden_min(f, lo: float, hi: float, iters: int) -> float:
+    """Derivative-free 1-D minimizer: `iters` golden-section steps on
+    [lo, hi].  The surviving interior point keeps its value, so each step
+    makes one new evaluation of f.  The result depends only on the
+    sequence of comparisons (a non-finite value never compares less)."""
     phi = (1 + 5**0.5) / 2
     a, b = lo, hi
     c, d = b - (b - a) / phi, a + (b - a) / phi
-    for _ in range(60):
-        if chi2_of(c)[0] < chi2_of(d)[0]:
-            b = d
-        else:
-            a = c
-        c, d = b - (b - a) / phi, a + (b - a) / phi
-    chi2, params, yhat = chi2_of((a + b) / 2)
-    return FitResult("bwZ", params, chi2, len(x) - 2, yhat)
-
-
-def _golden_min(f, lo: float, hi: float, iters: int = 60) -> float:
-    """Derivative-free 1-D minimizer (same scheme as fit_bwz)."""
-    phi = (1 + 5**0.5) / 2
-    a, b = lo, hi
-    c, d = b - (b - a) / phi, a + (b - a) / phi
+    fc, fd = f(c), f(d)
     for _ in range(iters):
-        if f(c) < f(d):
-            b = d
+        if fc < fd:
+            b, d, fd = d, c, fc
+            c = b - (b - a) / phi
+            fc = f(c)
         else:
-            a = c
-        c, d = b - (b - a) / phi, a + (b - a) / phi
+            a, c, fc = c, d, fd
+            d = a + (b - a) / phi
+            fd = f(d)
     return (a + b) / 2
+
+
+def _coordinate_descent(objective, params0, bounds, sweeps: int, iters: int) -> list:
+    """Cyclic coordinate descent: each sweep golden-section minimizes
+    objective(params) along every coordinate in turn, within its bounds.
+    A sweep that leaves every parameter unchanged is a fixed point: the
+    next sweep would start from the same point and make the same
+    comparisons, so stopping there returns exactly what all `sweeps`
+    sweeps would.  Deterministic — no RNG, no scipy."""
+    p = list(params0)
+    for _ in range(sweeps):
+        start = p.copy()
+        for i, (lo, hi) in enumerate(bounds):
+
+            def along(v: float, i: int = i) -> float:
+                q = p.copy()
+                q[i] = v
+                return objective(q)
+
+            p[i] = _golden_min(along, lo, hi, iters)
+        if p == start:
+            break
+    return p
 
 
 def _profiled_coordinate_fit(
@@ -123,40 +129,53 @@ def _profiled_coordinate_fit(
     sigma: np.ndarray,
     params0: list[float],
     bounds: list[tuple[float, float]],
-    sweeps: int = 8,
+    iters: int = 40,
 ) -> FitResult:
-    """Nonlinear families with a profiled linear normalization: cyclic
-    coordinate descent, each coordinate minimized by golden section with
-    the norm re-solved exactly per evaluation (weighted lstsq on the
-    single shape column).  Deterministic — no RNG, no scipy."""
-    p = list(params0)
+    """Nonlinear families with a profiled linear normalization: coordinate
+    descent over the shape parameters, at most 40 sweeps (the benchmark's
+    h-peak spectra reach the fixed point in 2-3).  Each evaluation solves
+    the norm of the one shape column b in closed form, (b·w²y)/(b·w²b)
+    with w = 1/sigma."""
+    w = 1.0 / np.where(sigma > 0, sigma, 1.0)
+    yw = y * w
 
-    def chi2_at(q: list[float]) -> tuple[float, np.ndarray, np.ndarray]:
-        with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
-            basis = shape(x, *q)[:, None]
-        if not np.all(np.isfinite(basis)):
+    def chi2_at(q: list[float]) -> tuple[float, float, np.ndarray]:
+        basis = shape(x, *q)
+        col = basis * w
+        # scaled by its largest entry: on price-scale x (fin1) the plain
+        # dot products over- or underflow while the column is finite
+        m = np.abs(col).max()
+        if not (np.isfinite(col).all() and m > 0.0):
             # out-of-domain shape (e.g. exp overflow on a wildly scaled
             # x): this family simply cannot describe the data here
-            return float("inf"), np.zeros(1), np.zeros_like(y)
-        coef, chi2, yhat = _weighted_lstsq(basis, y, sigma)
-        return chi2, coef, yhat
+            return float("inf"), 0.0, np.zeros_like(y)
+        u = col / m
+        t = (u @ yw) / (u @ u)
+        r = yw - u * t
+        return float(r @ r), t / m, basis * (t / m)
 
-    for _ in range(sweeps):
-        for i, (lo, hi) in enumerate(bounds):
+    with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
+        p = _coordinate_descent(lambda q: chi2_at(q)[0], params0, bounds, 40, iters)
+        chi2, norm, yhat = chi2_at(p)
+    return FitResult(model, np.array([norm, *p]), chi2, len(x) - (len(p) + 1), yhat)
 
-            def f(v: float, i: int = i) -> float:
-                q = p.copy()
-                q[i] = v
-                return chi2_at(q)[0]
 
-            p[i] = _golden_min(f, lo, hi, iters=40)
-    chi2, coef, yhat = chi2_at(p)
-    return FitResult(
-        model,
-        np.array([coef[0], *p]),
-        chi2,
-        len(x) - (len(p) + 1),
-        yhat,
+def _bw_shape(x: np.ndarray, mass: float, width: float) -> np.ndarray:
+    return width / ((x * x - mass * mass) ** 2 + mass * mass * width * width)
+
+
+def fit_bwz(x, y, sigma, mass: float = 91.1876) -> FitResult:
+    """Breit-Wigner (Z lineshape, fit_models.py bwZ): profile the linear
+    norm, golden-section the width — robust, derivative-free."""
+    return _profiled_coordinate_fit(
+        "bwZ",
+        lambda x, width: _bw_shape(x, mass, width),
+        x,
+        y,
+        sigma,
+        params0=[2.5],
+        bounds=[(0.1, 60.0)],
+        iters=60,
     )
 
 
@@ -191,24 +210,15 @@ def _bw_gamma_shape(x: np.ndarray, exp_param: float) -> np.ndarray:
 
 
 def fit_bw_gamma(x, y, sigma) -> FitResult:
-    def f(v: float) -> float:
-        with np.errstate(over="ignore", invalid="ignore"):
-            basis = _bw_gamma_shape(x, v)[:, None]
-        if not np.all(np.isfinite(basis)):
-            return float("inf")
-        _, chi2, _ = _weighted_lstsq(basis, y, sigma)
-        return chi2
-
-    best = _golden_min(f, -0.1, 0.1)
-    with np.errstate(over="ignore", invalid="ignore"):
-        basis = _bw_gamma_shape(x, best)[:, None]
-    if not np.all(np.isfinite(basis)):
-        return FitResult(
-            "bwGamma", np.array([0.0, best]), float("inf"), len(x) - 2, np.zeros_like(y)
-        )
-    coef, chi2, yhat = _weighted_lstsq(basis, y, sigma)
-    return FitResult(
-        "bwGamma", np.array([coef[0], best]), chi2, len(x) - 2, yhat
+    return _profiled_coordinate_fit(
+        "bwGamma",
+        _bw_gamma_shape,
+        x,
+        y,
+        sigma,
+        params0=[0.0],
+        bounds=[(-0.1, 0.1)],
+        iters=60,
     )
 
 
@@ -251,8 +261,6 @@ def fit_double_cb(x, y, sigma) -> FitResult:
             (0.3, 10.0),
             (0.1, 10.0),
         ],
-        # 6 correlated params need more cycles than the 3-param families
-        sweeps=40,
     )
 
 
@@ -269,93 +277,57 @@ FAMILIES = {
 }
 
 
-def select_best_model(
-    x: np.ndarray, y: np.ndarray, sigma: np.ndarray, families=FAMILIES
-) -> FitResult:
-    """chi2-argmin model selection (fitter.py:40-52): fit every family,
-    keep the minimum chi2/ndf.  Families whose shape blows up on this
-    x-range (non-finite chi2) are excluded, mirroring the reference's
-    chi2<=0 -> 999 guard."""
-    results = [fit(x, y, sigma) for fit in families.values()]
+def best_fit(results: list[FitResult]) -> FitResult:
+    """The minimum-chi2/ndf fit (fitter.py:40-52).  Families whose shape
+    blows up on this x-range (non-finite chi2) are excluded, mirroring
+    the reference's chi2<=0 -> 999 guard."""
     finite = [r for r in results if math.isfinite(r.chi2)]
     return min(finite or results, key=lambda r: r.chi2_ndf)
 
 
-def _fit_task(task) -> FitResult:
-    """Process-pool worker: one (family, category) fit.  Module-level so
-    it pickles by reference under both fork and spawn."""
-    fam, x, y, sigma = task
-    return FAMILIES[fam](x, y, sigma)
+def select_best_model(
+    x: np.ndarray, y: np.ndarray, sigma: np.ndarray, families=FAMILIES
+) -> FitResult:
+    """chi2-argmin model selection: fit every family, keep best_fit."""
+    return best_fit([fit(x, y, sigma) for fit in families.values()])
 
 
-def fit_families_all(
-    groups: dict, families=FAMILIES, parallel: bool = True
-) -> dict:
-    """Fit EVERY family on every category at once: groups maps key ->
-    (x, y, sigma); returns key -> [FitResult in `families` order].
-
-    The (category x family) grid is embarrassingly parallel and each
-    task is pure CPU-bound Python/numpy (golden-section loops around
-    tiny lstsq calls — the GIL serializes them in-process), so the grid
-    runs on a fork process pool sized to the driver host.  Numerics are
-    BIT-IDENTICAL to the serial loop: the same fit functions run on the
-    same inputs, one task per (key, family), results re-assembled by
-    index — processes only remove the GIL, they change no arithmetic.
-    Any pool failure (exotic hosts without fork) falls back to the
-    serial loop."""
-    fam_names = list(families)
-    keys = list(groups)
-    tasks = [
-        (fam, *groups[key]) for key in keys for fam in fam_names
-    ]
-    results: list[FitResult] | None = None
-    # the pool worker resolves families from the module-level FAMILIES;
-    # custom family dicts (tests) take the serial path
-    if (
-        parallel
-        and len(tasks) > 1
-        and os.name == "posix"
-        and families is FAMILIES
-    ):
-        try:
-            import multiprocessing as mp
-
-            ctx = mp.get_context("fork")
-            nproc = min(len(tasks), os.cpu_count() or 4)
-            with ctx.Pool(processes=nproc) as pool:
-                results = pool.map(_fit_task, tasks, chunksize=1)
-        except Exception:  # noqa: BLE001 - serial fallback, same numbers
-            results = None
-    if results is None:
-        results = [families[t[0]](*t[1:]) for t in tasks]
-    nfam = len(fam_names)
+def fit_families_all(groups: dict, families=FAMILIES) -> dict:
+    """Fit every family on every category: groups maps key ->
+    (x, y, sigma); returns key -> [FitResult in `families` order]."""
     return {
-        key: results[i * nfam : (i + 1) * nfam] for i, key in enumerate(keys)
+        key: [fit(*xys) for fit in families.values()] for key, xys in groups.items()
     }
 
 
-def fit_histogram_table(
+# a category needs at least this many filled bins to be fitted
+MIN_FIT_BINS = 6
+
+
+def histogram_groups(
     hist_pdf, lo: float, hi: float, nbins: int, by=("region", "channel")
 ) -> dict:
-    """Group the collected histogram table and fit each category — the
-    per-(channel, category) fan-out of fitter.py:12-128, driver-side on
-    tiny data."""
+    """Group the collected histogram table into the fit inputs: key ->
+    (bin centres x, values y, sigma = sqrt(sumw2)), in-range bins only,
+    for each category with at least MIN_FIT_BINS filled bins."""
     width = (hi - lo) / nbins
     groups = {}
     for key, g in hist_pdf.groupby(list(by)):
         g = g[(g.bin_idx >= 0) & (g.bin_idx < nbins)].sort_values("bin_idx")
-        if len(g) < 6:
+        if len(g) < MIN_FIT_BINS:
             continue
         x = lo + (g.bin_idx.to_numpy() + 0.5) * width
         y = g.value.to_numpy()
         sigma = np.sqrt(np.maximum(g.sumw2.to_numpy(), 1e-12))
         groups[key] = (x, y, sigma)
-    # every (category x family) fit on the fork pool at once (r12:
-    # wall / ncores, bit-identical results), then the same finite-filter
-    # chi2/ndf argmin as select_best_model per category
-    all_fits = fit_families_all(groups)
-    out = {}
-    for key, results in all_fits.items():
-        finite = [r for r in results if math.isfinite(r.chi2)]
-        out[key] = min(finite or results, key=lambda r: r.chi2_ndf)
-    return out
+    return groups
+
+
+def fit_histogram_table(
+    hist_pdf, lo: float, hi: float, nbins: int, by=("region", "channel")
+) -> dict:
+    """Fit each category of the collected histogram table and keep its
+    best_fit — the per-(channel, category) fan-out of fitter.py:12-128,
+    driver-side on tiny data."""
+    groups = histogram_groups(hist_pdf, lo, hi, nbins, by)
+    return {key: best_fit(results) for key, results in fit_families_all(groups).items()}

@@ -10,9 +10,9 @@ unbinned column, and model selection uses AIC = 2k + 2*NLL so families
 with different parameter counts compare fairly.
 
 Everything is deterministic and scipy-free: the normalization integral
-is a fixed-node composite Simpson rule; minimization is cyclic
-coordinate descent with golden-section line searches (the exact scheme
-finishing/fits.py uses for its nonlinear chi2 families).
+is a fixed-node composite Simpson rule; minimization is the cyclic
+coordinate descent with golden-section line searches that
+finishing/fits.py uses for its nonlinear chi2 families.
 
 Scale contract (same as the chi2 path): the distributed engine only
 ever REDUCES to the fit input — an unbinned fit consumes the collected
@@ -28,6 +28,8 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
+
+from copperhead_spark.finishing.fits import _coordinate_descent
 
 # composite-Simpson panels for the unit-normalization integral; fixed so
 # results are bit-reproducible across runs/machines
@@ -74,19 +76,6 @@ def nll_of(shape, x: np.ndarray, lo: float, hi: float, params) -> float:
     return float(len(x) * math.log(z) - np.sum(np.log(vals)))
 
 
-def _golden_min(f, lo: float, hi: float, iters: int = 40) -> float:
-    phi = (1 + 5**0.5) / 2
-    a, b = lo, hi
-    c, d = b - (b - a) / phi, a + (b - a) / phi
-    for _ in range(iters):
-        if f(c) < f(d):
-            b = d
-        else:
-            a = c
-        c, d = b - (b - a) / phi, a + (b - a) / phi
-    return (a + b) / 2
-
-
 def fit_nll(
     model: str,
     shape,
@@ -97,18 +86,12 @@ def fit_nll(
     bounds: list[tuple[float, float]],
     sweeps: int = 8,
 ) -> NLLResult:
-    """Cyclic coordinate descent on the NLL, each coordinate minimized by
-    golden section within its bounds — deterministic, no RNG/scipy."""
-    p = list(params0)
-    for _ in range(sweeps):
-        for i, (blo, bhi) in enumerate(bounds):
-
-            def f(v: float, i: int = i) -> float:
-                q = p.copy()
-                q[i] = v
-                return nll_of(shape, x, lo, hi, q)
-
-            p[i] = _golden_min(f, blo, bhi)
+    """Minimize the NLL by fits.py's coordinate descent (golden-section
+    line searches within the bounds, stopping at the exact fixed point)
+    — deterministic, no RNG/scipy."""
+    p = _coordinate_descent(
+        lambda q: nll_of(shape, x, lo, hi, q), params0, bounds, sweeps, iters=40
+    )
     return NLLResult(model, np.array(p), nll_of(shape, x, lo, hi, p), len(p))
 
 

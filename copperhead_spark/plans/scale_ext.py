@@ -311,7 +311,7 @@ def fin1_chi2_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     hiding behind a rows-only check."""
     import math
 
-    from copperhead_spark.finishing.fits import fit_families_all
+    from copperhead_spark.finishing.fits import best_fit, fit_families_all, histogram_groups
 
     li = table(spark, sf_dir, "lineitem")
     fine = histogram(
@@ -323,33 +323,9 @@ def fin1_chi2_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         by=[F.col("l_returnflag").alias("dataset")],
         weight=1 - F.col("l_discount"),
     )
-    pdf = fine.toPandas()
-    # one (category x family) fit grid on the fork pool (r12: the old
-    # path fit every family TWICE — once inside fit_histogram_table for
-    # the winner, once again here for the argmin/finiteness flags — and
-    # serially; same fits, same numbers, computed once in parallel)
-    import numpy as np
-
-    width = (_T_HI - _T_LO) / _T_N
-    groups = {}
-    for key, g in pdf.groupby(["dataset"]):
-        label = key[0] if isinstance(key, tuple) and len(key) == 1 else str(key)
-        g = g[(g.bin_idx >= 0) & (g.bin_idx < _T_N)].sort_values("bin_idx")
-        if len(g) < 6:
-            continue
-        x = _T_LO + (g.bin_idx.to_numpy() + 0.5) * width
-        y = g.value.to_numpy()
-        sigma = np.sqrt(np.maximum(g.sumw2.to_numpy(), 1e-12))
-        groups[label] = (len(g), x, y, sigma)
-    all_fits = fit_families_all(
-        {label: xys for label, (_, *xys) in groups.items()}
-    )
-    rows = []
-    for label in sorted(all_fits, key=str):
-        results = all_fits[label]
-        finite = [r for r in results if math.isfinite(r.chi2)]
-        winner = min(finite or results, key=lambda r: r.chi2_ndf)
-        rows.append((label, groups[label][0], winner, finite))
+    by_key = histogram_groups(fine.toPandas(), _T_LO, _T_HI, _T_N, by=["dataset"])
+    groups = {key[0]: xys for key, xys in by_key.items()}
+    all_fits = fit_families_all(groups)
     # exact anchors come from the SAME histogram aggregate the fit used
     # (hist_rows = unweighted count per dataset needs its own exact agg)
     anchors = (
@@ -365,7 +341,11 @@ def fin1_chi2_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anchor_by = {r["dataset"]: r for r in anchors}
     out = []
-    for label, used_bins, winner, finite in rows:
+    for label in sorted(all_fits):
+        results = all_fits[label]
+        used_bins = len(groups[label][0])
+        winner = best_fit(results)
+        finite = [r for r in results if math.isfinite(r.chi2)]
         a = anchor_by[label]
         # empty `finite` (all 6 families non-finite on some future
         # domain/sf) must surface as failing pass-flags against the

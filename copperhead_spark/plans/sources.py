@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from copperhead_spark.catalog import scratch_dir, table
+from copperhead_spark.finishing.fits import MIN_FIT_BINS
 from copperhead_spark.functions.exact import exact_sum, exact_sum_sql
 from copperhead_spark.plans.registry import register
 from copperhead_spark.sources.parquet_io import read_partitioned, write_partitioned
@@ -1693,7 +1694,7 @@ def pipeline_root_to_th1_variations_e2e(
 # floor, all 6 families fit finite in each, winner chi2/ndf observed
 # <= 0.58; the bound carries ~80x margin so only a catastrophic fit
 # regression trips it, never fixture noise.
-_FIT_E2E_MIN_BINS = 6
+_FIT_E2E_MIN_BINS = MIN_FIT_BINS
 _FIT_E2E_CHI2_NDF_BOUND = 50.0
 
 
@@ -1755,41 +1756,15 @@ def pipeline_root_to_fit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     each fit consumes O(nbins) collected numbers driver-side."""
     import math
 
-    import numpy as np
-
-    from copperhead_spark.finishing.fits import fit_families_all
+    from copperhead_spark.finishing.fits import best_fit, fit_families_all, histogram_groups
     from copperhead_spark.functions.exact import exact_sum
     from copperhead_spark.operators.histogram import bin_index
     from copperhead_spark.pipeline import channel_case, stage1_arrays, stage2
 
     flat = stage1_arrays(root_events_scan(spark, sf_dir))
     hist = stage2(flat)
-    pdf = hist.toPandas()
-    # ONE fitting pass per category (select_best_model semantics inlined:
-    # winner = min chi2/ndf over finite families) — fitting every family
-    # twice via fit_histogram_table + a refit loop measured 2x the
-    # driver-side cost at identical results (r11 note, still true)
-    width = (_TH1_HI - _TH1_LO) / _TH1_NBINS
-    groups = {}
-    for key, g in pdf.groupby(["region", "channel"]):
-        g = g[(g.bin_idx >= 0) & (g.bin_idx < _TH1_NBINS)].sort_values("bin_idx")
-        if len(g) < _FIT_E2E_MIN_BINS:
-            continue
-        x = _TH1_LO + (g.bin_idx.to_numpy() + 0.5) * width
-        y = g.value.to_numpy()
-        sigma = np.sqrt(np.maximum(g.sumw2.to_numpy(), 1e-12))
-        groups[key] = (len(g), x, y, sigma)
-    # r12: the whole (category x family) grid runs on a fork process
-    # pool (fit_families_all) — the six-family menu per category was the
-    # dominant driver-side cost of this query (~8 of 10.6 s, serial,
-    # GIL-bound); the pool runs the SAME fit functions on the SAME
-    # inputs, so every chi2/winner is bit-identical to the serial loop
-    all_fits = fit_families_all({k: xys for k, (_, *xys) in groups.items()})
-    refit = {}
-    for key, results in all_fits.items():
-        finite = [r for r in results if math.isfinite(r.chi2)]
-        winner = min(finite or results, key=lambda r: r.chi2_ndf)
-        refit[key] = (groups[key][0], winner, finite)
+    groups = histogram_groups(hist.toPandas(), _TH1_LO, _TH1_HI, _TH1_NBINS)
+    all_fits = fit_families_all(groups)
     # exact anchors from the SAME flat table the histogram consumed.
     # codegen_barrier is load-bearing: fused with stage1's kinematics
     # tail, the channel CASE + bin + exact-sum partial agg push the
@@ -1813,8 +1788,11 @@ def pipeline_root_to_fit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anchor_by = {(r["region"], r["channel"]): r for r in anchors}
     out = []
-    for key in sorted(refit):
-        used_bins, winner, finite = refit[key]
+    for key in sorted(all_fits):
+        results = all_fits[key]
+        used_bins = len(groups[key][0])
+        winner = best_fit(results)
+        finite = [r for r in results if math.isfinite(r.chi2)]
         a = anchor_by[key]
         min_ndf = min((r.chi2_ndf for r in finite), default=float("inf"))
         out.append(
