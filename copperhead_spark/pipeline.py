@@ -113,7 +113,11 @@ def _derive_and_label(flat: DataFrame) -> DataFrame:
     the JVM's libm can differ in the last ulp, and the oracles that
     consume this table compare bit for bit."""
     flat = _pair_kinematics(flat, "mu1_", "mu2_", "dimuon_", MU_MASS, MU_MASS)
-    flat = _pair_kinematics_jets(flat)
+    # jj system: NULL for events with < 2 clean jets (the reference's
+    # NaN-for-missing-jets semantics, FIXTURES.md §F2).  NULL jet2 inputs
+    # propagate to NULL jj_* through the arithmetic itself, so there is
+    # no filter/union split (that would execute the upstream plan twice).
+    flat = _pair_kinematics(flat, "jet1_", "jet2_", "jj_", "jet1_mass", "jet2_mass")
 
     region = (
         F.when((F.col("dimuon_mass") > 76) & (F.col("dimuon_mass") < 106), "z-peak")
@@ -163,15 +167,6 @@ def stage1_arrays(events: DataFrame) -> DataFrame:
     event stream: stage 2's histogram exchange is its only shuffle."""
     ev = events.filter(F.col("HLT_IsoMu24") & F.col("Flag_goodVertices"))
     return _derive_and_label(stage1_flat_arrow(ev))
-
-
-def _pair_kinematics_jets(flat: DataFrame) -> DataFrame:
-    """jj system for events with >= 2 clean jets; NULL otherwise (the
-    reference's NaN-for-missing-jets semantics, FIXTURES.md §F2).
-    Single pass: NULL jet2 inputs propagate to NULL jj_* columns through
-    the arithmetic itself (no filter/union split — that would execute the
-    whole upstream plan twice)."""
-    return _pair_kinematics(flat, "jet1_", "jet2_", "jj_", "jet1_mass", "jet2_mass")
 
 
 def channel_case():

@@ -940,7 +940,7 @@ def _root_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     SCAN is the operator under test."""
     import numpy as np
 
-    from copperhead_spark.sources.rootio import list_trees, write_flat_tree
+    from copperhead_spark.sources.rootio import list_trees, write_tree
 
     out_dir = scratch_dir("rootfix", sf_dir)
     path = os.path.join(out_dir, "events.root")
@@ -951,7 +951,7 @@ def _root_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
             .select(*_S1_BRANCHES)
             .toPandas()
         )
-        write_flat_tree(
+        write_tree(
             path,
             "Events",
             {
@@ -1032,7 +1032,7 @@ def _root_multifile_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
     the multi-file SCAN is the operator under test."""
     import numpy as np
 
-    from copperhead_spark.sources.rootio import write_flat_tree
+    from copperhead_spark.sources.rootio import write_tree
 
     out_dir = scratch_dir("rootfix_multi", sf_dir)
     paths = [os.path.join(out_dir, f"part{k}.root") for k in range(3)]
@@ -1047,7 +1047,7 @@ def _root_multifile_fixture(spark: SparkSession, sf_dir: str) -> list[str]:
         okey = pdf["l_orderkey"].to_numpy(np.int64)
         for k, (path, spec) in enumerate(zip(paths, _S1F_SPECS)):
             part = pdf[okey % 3 == k]
-            write_flat_tree(
+            write_tree(
                 path,
                 "Events",
                 {
@@ -1831,7 +1831,7 @@ def _root_zstd_fixture(spark: SparkSession, sf_dir: str) -> str:
     design; the ZS SCAN path is the operator under test."""
     import numpy as np
 
-    from copperhead_spark.sources.rootio import write_flat_tree
+    from copperhead_spark.sources.rootio import write_tree
 
     out_dir = scratch_dir("rootfix_zstd", sf_dir)
     path = os.path.join(out_dir, "lineitem_zs.root")
@@ -1843,7 +1843,7 @@ def _root_zstd_fixture(spark: SparkSession, sf_dir: str) -> str:
             .orderBy("l_orderkey", "l_linenumber")
             .toPandas()
         )
-        write_flat_tree(
+        write_tree(
             path,
             "Events",
             {

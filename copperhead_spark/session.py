@@ -16,8 +16,7 @@ from pyspark.sql import SparkSession
 
 
 def _driver_mem() -> str:
-    """Driver JVM heap: pinned (-Xms = -Xmx), pre-touched at startup
-    when this boot's fault cost makes that cheap (_pretouch_ok) — see
+    """Driver JVM heap: pinned (-Xms = -Xmx) and faulted in lazily — see
     the r12 note on spark.driver.extraJavaOptions below.  24g
     holds the full bench soak with headroom while two concurrent
     sessions (tests + bench) still fit the sandbox; override for bigger
@@ -34,27 +33,6 @@ def _driver_mem() -> str:
         return f"{max(2, min(24, quarter_g))}g"
     except (OSError, ValueError, IndexError):
         return "24g"
-
-
-def _pretouch_ok() -> bool:
-    """Whether the driver heap should be pre-touched at JVM start
-    (-XX:+AlwaysPreTouch).  The pin itself (-Xms = -Xmx) is always safe;
-    pre-touch is only a win when fresh first-touch faults are cheap.  On
-    a healthy host a fault costs well under 1 µs and faulting the whole
-    heap once at startup removes the mid-query fault storms documented
-    in the r12 note below.  But when the hypervisor reclaims guest-freed
-    pages (virtio free-page reporting), every fresh fault round-trips to
-    the host at ~100 µs — measured on one sandbox boot: 67 s to
-    pre-touch a 2 GiB heap, i.e. 10+ MINUTES of pure system time for a
-    bench-sized heap before the session even starts.  A userspace probe
-    cannot detect that boot state reliably (pages recently freed by
-    other processes re-fault cheaply until the host reclaims them, so a
-    small probe reads "fast" while the 24 GiB pre-touch still hits the
-    slow path — observed in-image).  The risk is asymmetric — lazy
-    faulting costs seconds amortized over queries, pre-touch can cost
-    minutes up front — so the default is OFF; opt in with
-    `SPARK_GRAFT_PRETOUCH=1` on hosts known to fault cheaply."""
-    return os.environ.get("SPARK_GRAFT_PRETOUCH", "") == "1"
 
 
 def _cpus() -> int:
@@ -98,30 +76,27 @@ def get_spark(
         # prophylaxis for genuinely long sessions (plan-audit runs all
         # 180+ queries in one JVM), not as a fix for that regression.
         #
-        # r12 heap pinning (-Xms = -Xmx, adaptive +AlwaysPreTouch,
-        # madvise-THP):
+        # r12 heap pinning (-Xms = -Xmx, madvise-THP):
         # per-process CPU attribution of the bimodal query walls (same
         # collect 1.2s or 21s) showed the slow mode is almost pure JVM
         # *system* time — 40+s of minor-fault storms whenever G1 commits
         # or re-commits heap regions mid-query (this virtualized host
         # reclaims guest-freed pages, making each fresh fault ~100us).
-        # Pinning the heap and faulting it once at startup (2 MB THP
-        # pages where available: 256x fewer faults) moves that cost out
-        # of every query: the heaviest e2e went from 3-13s erratic walls
-        # to a stable 1.4-1.9s.  Standard long-running-service JVM
-        # practice, not a local[32] tune; on a cluster the same flags
-        # belong in spark.executor.extraJavaOptions.  Pre-touch is
-        # gated on _pretouch_ok()'s fault-cost probe: on boots where
-        # the hypervisor makes every fresh fault ~100 µs, pre-touching
-        # the heap takes minutes of pure system time before the session
-        # starts, strictly worse than faulting lazily (the pin + THP
-        # halves are kept unconditionally — they are always safe).
+        # Pinning the heap (2 MB THP pages where available: 256x fewer
+        # faults) keeps G1 from shrinking and re-committing regions
+        # mid-query; in r12, pinned and pre-touched, the heaviest e2e
+        # went from 3-13s erratic walls to a stable 1.4-1.9s.  Standard
+        # long-running-service JVM practice, not a local[32] tune; on a
+        # cluster the same flags belong in
+        # spark.executor.extraJavaOptions.  The heap is not pre-touched
+        # (-XX:+AlwaysPreTouch): on boots where the hypervisor makes
+        # every fresh fault ~100 µs, faulting a 2 GiB heap took 67 s of
+        # pure system time before the session started (10+ minutes at
+        # 24 GiB), strictly worse than faulting lazily.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-            f"-Xms{driver_mem} "
-            + ("-XX:+AlwaysPreTouch " if _pretouch_ok() else "")
-            + "-XX:+UseTransparentHugePages",
+            f"-Xms{driver_mem} -XX:+UseTransparentHugePages",
         )
         # r12: Python workers (numpy/pyarrow kernels) hit the same
         # reclaimed-page refaults on every multi-MB allocation glibc

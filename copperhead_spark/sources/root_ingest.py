@@ -49,13 +49,13 @@ def rootio_decoder(
     """Pure-python byte decode (sources/rootio.py) — the decoder that
     runs in THIS image.  Flat branches come back as plain columns;
     jagged (NanoAOD counts+payload) branches as Arrow list columns,
-    zlib "ZL" baskets transparently inflated (r9: retires the uproot
-    gate for compressed/jagged rootio-written trees; real stock-ROOT
-    files still need the uproot decoder below — rootio's metadata is a
-    CSTreeIndex record, not TStreamerInfo).  Column pruning and
-    basket-level entry-range pruning happen inside read_tree, so each
-    mapInArrow task touches only its chunk's baskets of the whitelisted
-    branches."""
+    ZL/XZ/L4/ZS baskets transparently inflated.  rootio reads the
+    subset of the TTree object record its own writer streams; stock-ROOT
+    files with the full streamed layout still need the uproot decoder
+    below.  Column pruning and basket-level entry-range pruning happen
+    inside read_tree, which locates baskets from the record's
+    fBasketSeek tables, so each mapInArrow task touches only its chunk's
+    baskets of the whitelisted branches."""
     import pyarrow as pa
 
     from copperhead_spark.sources.rootio import read_tree
@@ -110,32 +110,27 @@ def scan_entries(
     spark: SparkSession,
     paths: Sequence[str],
     tree: str = "Events",
-    meta_reader=None,
 ) -> DataFrame:
     """Distributed entry-count pre-scan: one row (path, entries) per
     file — the preprocessing step that feeds read_nanoaod's chunk
     planning (the reference runs the same step through coffea's
     preprocess; run_stage1.py:153-166 consumes its output).
 
-    Metadata-only: the rootio reader mmaps the file and walks TKey
-    headers; basket payloads are never paged in, so a task costs
-    O(n_keys) header reads regardless of file size.  At 100k files this
-    is one map-only stage over a tiny path DataFrame; the (path,
-    entries) result is bounded at one short row per file, safe to
-    collect into plan_chunks.
-
-    ``meta_reader(path, tree) -> int`` is injectable like read_nanoaod's
-    decoder; the default uses rootio's CSTreeIndex (uproot-free)."""
-    if meta_reader is None:
-        def meta_reader(path: str, t: str) -> int:
-            from copperhead_spark.sources.rootio import list_trees
-
-            for name, n in list_trees(path):
-                if name == t:
-                    return n
-            raise KeyError(f"tree {t!r} not found in {path}")
-
+    Metadata-only: rootio's list_trees mmaps the file and reads the
+    entry count from its TTree object record, skipping every other key
+    by one length read and a classname byte compare; basket payloads
+    are never paged in.  At 100k files this is one map-only stage over
+    a tiny path DataFrame; the (path, entries) result is bounded at one
+    short row per file, safe to collect into plan_chunks."""
     import pyarrow as pa
+
+    def entries(path: str) -> int:
+        from copperhead_spark.sources.rootio import list_trees
+
+        for name, n in list_trees(path):
+            if name == tree:
+                return n
+        raise KeyError(f"tree {tree!r} not found in {path}")
 
     if not paths:
         raise ValueError("scan_entries: empty path list")
@@ -164,7 +159,7 @@ def scan_entries(
                         [r["path"] for r in rows], type=pa.string()
                     ),
                     "entries": pa.array(
-                        [meta_reader(r["path"], tree) for r in rows],
+                        [entries(r["path"]) for r in rows],
                         type=pa.int64(),
                     ),
                 }

@@ -40,16 +40,17 @@ REAL per the public spec (byte-for-byte):
   - leaf type letters as in TTree draw specs: D=float64, F=float32,
     L=int64, I=int32, O=bool (1 byte).
 
-TREE METADATA (r11: CSTreeIndex retired): tree metadata is a REAL
-streamed TTree object record — a TKey of class "TTree" whose payload
-carries TNamed + attribute bases, fEntries, and fBranches holding
-TBranch v13 records with the fBasketEntry/fBasketSeek Long64 tables and
-typed TLeaf records (fLeafCount linking jagged value leaves to their
-counts leaf) in the public TBufferFile layout (sources/treeobj.py).
-The reader navigates baskets DIRECTLY from fBasketSeek — a pruned
-basket's key header is never even read — and only falls back to the
-sequential key walk (the TFile::Recover scan) for legacy files that
-still carry a "CSTreeIndex" record.  Real baskets of variable-size
+TREE METADATA: the one tree-metadata format is a REAL streamed TTree
+object record — a TKey of class "TTree" whose payload carries TNamed +
+attribute bases, fEntries, and fBranches holding TBranch v13 records
+with the fBasketEntry/fBasketSeek Long64 tables and typed TLeaf records
+(fLeafCount linking jagged value leaves to their counts leaf) in the
+public TBufferFile layout (sources/treeobj.py).  The reader finds that
+record with a header-only key walk that skips every other class by a
+byte compare, then navigates baskets DIRECTLY from fBasketSeek — a
+pruned basket's key header is never even read.  A file without a TTree
+record has no tree for this reader, whatever other records it carries.
+Real baskets of variable-size
 entries also embed an fEntryOffsetLen offset table; here the counts
 branch alone carries that information (it is sufficient: NanoAOD
 readers reconstruct offsets from counts the same way).  TH1F records
@@ -73,8 +74,8 @@ real ROOT build or NanoAOD file, which this image does not have);
 every structure follows the public spec so swapping in uproot touches
 only the decoder function (sources/root_ingest.py).
 
-Reads are mmap-backed: the key walk touches only header pages, and a
-pruned basket's payload bytes are never paged in — a 1000-chunk
+Reads are mmap-backed: the metadata walk touches only header pages,
+and a pruned basket's payload bytes are never paged in — a 1000-chunk
 mapInArrow fan-out over one large file costs each task O(its chunk), not
 O(file) (r9: closes the ADVICE read-amplification item).
 """
@@ -93,7 +94,6 @@ MAGIC = b"root"
 FBEGIN = 100
 _FVERSION = 62406  # layout version the header advertises (6.24/06)
 _KEY_VERSION = 4
-_TREE_INDEX_CLASS = "CSTreeIndex"
 _MAXZIP = 0xFFFFFF  # max bytes one ZL frame covers (ROOT kMAXZIPBUF)
 _BASKET_HDR = 19  # fVersion/fBufferSize/fNevBufSize/fNevBuf/fLast + flag
 
@@ -325,11 +325,12 @@ def _payload(buf, k: _Key) -> bytes | memoryview:
     return _zl_decompress(raw, k.objlen)
 
 
-def _walk_keys(buf):
-    """Sequential key scan from fBEGIN to fEND (the TFile::Recover walk).
-    Bounded: every iteration advances by at least one header, and a
-    non-positive record length (a freed gap marker) is skipped by its
-    declared size or aborts — garbage can never loop forever."""
+def _key_offsets(buf):
+    """Offsets of the key records from fBEGIN to fEND (the
+    TFile::Recover walk), reading one length word per record.  Bounded:
+    every iteration strictly advances, and a non-positive record length
+    (a freed gap marker) is skipped by its declared size or aborts —
+    garbage can never loop forever."""
     if len(buf) < FBEGIN or buf[:4] != MAGIC:
         raise ValueError("not a ROOT file (bad magic)")
     (fend,) = struct.unpack_from(">i", buf, 12)
@@ -342,8 +343,25 @@ def _walk_keys(buf):
         if nbytes < 0:  # deleted-record gap: length is -nbytes
             pos += -nbytes
             continue
-        yield _read_key(buf, pos)
+        yield pos
         pos += nbytes
+
+
+def _walk_keys(buf):
+    """Every key record of the file, headers parsed."""
+    for pos in _key_offsets(buf):
+        yield _read_key(buf, pos)
+
+
+def _walk_metadata_keys(buf):
+    """The keys of the TTree object records.  A byte-level classname
+    pre-check (the classname TString starts right after the 26-byte
+    fixed header) means every other key — in a real file, tens of
+    thousands of TBaskets before the tree record — costs one length read
+    and one memcmp instead of a full 3-TString header parse."""
+    for pos in _key_offsets(buf):
+        if buf[pos + 26 : pos + 32] == b"\x05TTree":
+            yield _read_key(buf, pos)
 
 
 def _open_buf(path: str):
@@ -494,15 +512,16 @@ def write_tree(
     entry) and jagged branches (``jagged``: name -> (counts_branch,
     flat values array) — the NanoAOD nMuon/Muon_pt layout, where the
     int counts branch in ``columns`` gives each entry's multiplicity).
-    One CSTreeIndex v2 record carries entries/basket grid/branch table;
-    per-branch TBasket records hold at most ``basket_entries`` ENTRIES
+    Per-branch TBasket records hold at most ``basket_entries`` ENTRIES
     each (a jagged basket holds all values of its entry window),
     compressed when ``compress`` > 0 — a bare 1..9 means zlib "ZL"
     frames; ROOT-style alg*100+level selects the codec (101..109 kZLIB,
-    201..209 kLZMA/"XZ", 401..409 kLZ4/"L4" frames).  Baskets are
-    interleaved
-    branch-major in entry order, matching how a real writer flushes
-    per-branch baskets as entries accumulate."""
+    201..209 kLZMA/"XZ", 401..409 kLZ4/"L4", 501..509 kZSTD/"ZS"
+    frames).  Baskets are interleaved branch-major in entry order,
+    matching how a real writer flushes per-branch baskets as entries
+    accumulate.  One TTree object record, written last, carries the
+    entry count, the branch/leaf table and each branch's
+    fBasketEntry/fBasketSeek tables."""
     jagged = jagged or {}
     if not columns and not jagged:
         raise ValueError("write_tree: no branches")
@@ -573,11 +592,11 @@ def write_tree(
                     _basket_bytes(v[lo : lo + nvals], letters[bname], stop - start),
                 )
             )
-    # r11 (CSTreeIndex retired on write): tree metadata is a REAL TTree
-    # object record — TNamed/attr bases, fEntries, fBranches with
-    # per-branch fBasketEntry/fBasketSeek tables and typed TLeaf records
-    # (sources/treeobj.py documents the byte layout; written LAST, after
-    # the baskets, exactly when real ROOT knows the seek table)
+    # tree metadata is a REAL TTree object record — TNamed/attr bases,
+    # fEntries, fBranches with per-branch fBasketEntry/fBasketSeek tables
+    # and typed TLeaf records (sources/treeobj.py documents the byte
+    # layout; written LAST, after the baskets, exactly when real ROOT
+    # knows the seek table)
     from copperhead_spark.sources.treeobj import branch_record, tree_record
 
     branch_recs = [
@@ -598,23 +617,6 @@ def write_tree(
         compressible=False,
     )
     w.close()
-
-
-def write_flat_tree(
-    path: str,
-    tree: str,
-    columns: dict[str, np.ndarray],
-    basket_entries: int = 8192,
-    title: str = "",
-    compress: int = 0,
-    streamers: bool = False,
-) -> None:
-    """Flat-only convenience wrapper over write_tree."""
-    write_tree(
-        path, tree, columns,
-        basket_entries=basket_entries, title=title, compress=compress,
-        streamers=streamers,
-    )
 
 
 def write_th1f(
@@ -649,76 +651,21 @@ def write_th1f(
 
 
 class _TreeMeta:
-    # ``tables`` (r11): bname -> (basket_entry list [nb+1, fEntries-
-    # terminated], basket_seek list [nb]) from the TTree object record;
-    # None for legacy CSTreeIndex files, which fall back to the key walk
-    __slots__ = ("name", "n", "basket_entries", "letters", "counts_of", "tables")
-
-
-def _parse_index(buf, k: _Key) -> _TreeMeta:
-    pay = _payload(buf, k)
-    if len(pay) < 14:
-        raise ValueError(f"truncated CSTreeIndex record for tree {k.name!r}")
-    (version,) = struct.unpack_from(">h", pay, 0)
-    m = _TreeMeta()
-    m.name = k.name
-    m.letters = {}
-    m.counts_of = {}
-    m.tables = None
-    if version == 1:
-        m.n, nb = struct.unpack_from(">qi", pay, 2)
-        m.basket_entries = 0  # v1: spans come from basket headers
-        pos = 14
-        for _ in range(nb):
-            bname, pos = _read_tstring(pay, pos)
-            if pos >= len(pay):
-                raise ValueError("truncated CSTreeIndex branch table")
-            letter = chr(pay[pos])
-            pos += 1
-            if letter not in LEAF_DTYPES:
-                raise ValueError(f"unknown leaf type {letter!r}")
-            m.letters[bname] = letter
-    elif version == 2:
-        if len(pay) < 18:
-            raise ValueError(f"truncated CSTreeIndex record for tree {k.name!r}")
-        m.n, m.basket_entries, nb = struct.unpack_from(">qii", pay, 2)
-        if m.basket_entries < 1:
-            raise ValueError("CSTreeIndex v2: bad basket_entries")
-        pos = 18
-        for _ in range(nb):
-            bname, pos = _read_tstring(pay, pos)
-            if pos >= len(pay):
-                raise ValueError("truncated CSTreeIndex branch table")
-            letter = chr(pay[pos])
-            pos += 1
-            if letter not in LEAF_DTYPES:
-                raise ValueError(f"unknown leaf type {letter!r}")
-            cname, pos = _read_tstring(pay, pos)
-            m.letters[bname] = letter
-            if cname:
-                m.counts_of[bname] = cname
-    else:
-        raise ValueError(f"unknown CSTreeIndex version {version}")
-    for bname, cname in m.counts_of.items():
-        if m.letters.get(cname) not in ("I", "L"):
-            raise ValueError(
-                f"jagged branch {bname!r}: counts branch {cname!r} missing "
-                "or not integer"
-            )
-    return m
+    # ``tables``: bname -> (basket_entry list [nb+1, fEntries-terminated],
+    # basket_seek list [nb]) from the TTree object record
+    __slots__ = ("name", "n", "letters", "counts_of", "tables")
 
 
 def _meta_from_tree_record(buf, k: _Key) -> _TreeMeta:
-    """_TreeMeta from a real TTree object record (r11; treeobj.py) —
-    entry spans and basket seeks come from the branch tables, so reads
-    never need the sequential key walk."""
+    """_TreeMeta from a real TTree object record (treeobj.py) — entry
+    spans and basket seeks come from the branch tables, so reads never
+    need a walk over the basket keys."""
     from copperhead_spark.sources.treeobj import parse_tree_record
 
     info = parse_tree_record(bytes(_payload(buf, k)))
     m = _TreeMeta()
     m.name = info["name"]
     m.n = int(info["entries"])
-    m.basket_entries = 0  # spans are explicit per basket
     m.letters = {}
     m.counts_of = {}
     m.tables = {}
@@ -751,49 +698,10 @@ def list_trees(path: str) -> list[tuple[str, int]]:
     """(tree name, n_entries) for every tree in the file — feeds
     read_nanoaod's (file, entries) chunk planning."""
     buf = _open_buf(path)
-    out = []
-    for k in _walk_keys(buf):
-        if k.classname == "TTree":
-            out.append((k.name, _meta_from_tree_record(buf, k).n))
-        elif k.classname == _TREE_INDEX_CLASS:
-            m = _parse_index(buf, k)
-            out.append((m.name, m.n))
-    return out
-
-
-def _walk_metadata_keys(buf):
-    """The `_walk_keys` scan restricted to TTree / CSTreeIndex records,
-    with a byte-level classname pre-check so non-matching keys (in a
-    real file: tens of thousands of TBaskets between FBEGIN and the
-    tree record) cost one length read + one memcmp instead of a full
-    3-TString header parse.  Yields (saw_any_key, key) pairs; key is
-    None for the final sentinel so callers can distinguish "no keys at
-    all" from "no tree record".  Same bounds discipline as _walk_keys:
-    every iteration advances by >= one header, garbage cannot loop."""
-    if len(buf) < FBEGIN or buf[:4] != MAGIC:
-        raise ValueError("not a ROOT file (bad magic)")
-    (fend,) = struct.unpack_from(">i", buf, 12)
-    fend = min(fend, len(buf))
-    pos = FBEGIN
-    saw = False
-    while pos + 4 <= fend:
-        (nbytes,) = struct.unpack_from(">i", buf, pos)
-        if nbytes == 0:
-            break
-        if nbytes < 0:  # deleted-record gap: length is -nbytes
-            pos += -nbytes
-            continue
-        saw = True
-        # classname TString starts right after the 26-byte fixed header;
-        # short-form length (< 255) covers every real ROOT classname
-        cpos = pos + 26
-        if cpos < len(buf):
-            n = buf[cpos]
-            cls = bytes(buf[cpos + 1 : cpos + 1 + n]) if n != 255 else b""
-            if cls == b"TTree" or cls == b"CSTreeIndex":
-                yield saw, _read_key(buf, pos)
-        pos += nbytes
-    yield saw, None
+    return [
+        (k.name, _meta_from_tree_record(buf, k).n)
+        for k in _walk_metadata_keys(buf)
+    ]
 
 
 # file-metadata cache, keyed by (path, mtime_ns, size, tree): parsing
@@ -827,24 +735,17 @@ def _tree_meta_cached(path: str, buf, tree: str | None) -> _TreeMeta:
 
 
 def _tree_meta(buf, tree: str | None) -> _TreeMeta:
-    saw_root = False
-    for saw_root, k in _walk_metadata_keys(buf):
-        if k is None:
-            break
-        if k.classname == "TTree" and (tree is None or k.name == tree):
+    for k in _walk_metadata_keys(buf):
+        if tree is None or k.name == tree:
             return _meta_from_tree_record(buf, k)
-        if k.classname == _TREE_INDEX_CLASS and (tree is None or k.name == tree):
-            return _parse_index(buf, k)
-    if saw_root:
-        raise KeyError(
-            f"tree {tree!r} not found: the file parses as ROOT but has "
-            "neither a TTree object record this reader understands nor a "
-            "legacy CSTreeIndex record; real ROOT/NanoAOD files with the "
-            "full streamed TTree layout need `pip install uproot awkward` "
-            "(sources/root_ingest.py swaps the decoder automatically once "
-            "uproot is importable)"
-        )
-    raise KeyError(f"tree {tree!r} not found (file has no keys)")
+    named = "" if tree is None else f" named {tree!r}"
+    raise KeyError(
+        f"tree {tree!r} not found: the file has no TTree object record"
+        f"{named} (the only tree metadata this reader reads); real "
+        "ROOT/NanoAOD files with the full streamed TTree layout need "
+        "`pip install uproot awkward` (sources/root_ingest.py swaps the "
+        "decoder automatically once uproot is importable)"
+    )
 
 
 class _BasketRef:
@@ -883,14 +784,13 @@ def read_tree(
     """Columnar chunked read.  Flat branches come back as 1-D arrays;
     jagged branches as (counts int64[entries], values) pairs.  ONLY the
     requested branches (plus the counts branches jagged ones need) are
-    decoded — other branches' baskets are skipped by their key length
-    without touching (or decompressing, or even paging in) the payload —
-    and within a branch only the baskets overlapping
+    decoded, and within a branch only the baskets overlapping
     [entry_start, entry_stop) are materialized: the basket-level pruning
     a chunked uproot read performs, which is what makes the mapInArrow
-    fan-out in read_nanoaod scale.  Decode work per task is O(chunk);
-    the mmap walk reads key headers only, so pruned payload bytes are
-    never paged in."""
+    fan-out in read_nanoaod scale.  Baskets are located from the TTree
+    record's fBasketEntry/fBasketSeek tables, so a pruned basket's key
+    header is never read and its payload never paged in; decode work per
+    task is O(chunk)."""
     buf = _open_buf(path)
     meta = _tree_meta_cached(path, buf, tree)
     want = list(branches) if branches is not None else list(meta.letters)
@@ -905,51 +805,30 @@ def read_tree(
         want + [meta.counts_of[b] for b in want if b in meta.counts_of]
     ))
 
+    # entry spans and seeks come from the branch fBasketEntry/fBasketSeek
+    # tables, so only the OVERLAPPING baskets' key headers are read at
+    # all — a chunked task touches O(its baskets) pages.  Non-overlapping
+    # baskets are pruned before their header is read.
     refs: dict[str, list[_BasketRef]] = {b: [] for b in need}
-    if meta.tables is not None:
-        # r11 (TTree object record): entry spans and seeks come from the
-        # branch fBasketEntry/fBasketSeek tables, so only the OVERLAPPING
-        # baskets' key headers are read at all — a chunked task touches
-        # O(its baskets) pages, never a whole-file key walk.  Non-
-        # overlapping baskets are pruned before their header is read.
-        for b in need:
-            ent, seek = meta.tables[b]
-            for i, sk in enumerate(seek):
-                blo, bhi = ent[i], ent[i + 1]
-                if bhi <= start or blo >= stop:
-                    continue  # pruned: header never read, payload never paged
-                if sk < FBEGIN:  # unpack_from would wrap a negative offset
-                    raise ValueError(f"branch {b!r}: bad fBasketSeek {sk}")
-                k = _read_key(buf, sk)
-                if k.classname != "TBasket" or k.name != b:
-                    raise ValueError(
-                        f"branch {b!r}: fBasketSeek[{i}] does not point at "
-                        f"a {b!r} TBasket (found {k.classname!r}/{k.name!r})"
-                    )
-                r = _BasketRef()
-                r.key = k
-                r.lo = blo
-                r.hi = bhi
-                refs[b].append(r)
-    else:
-        # legacy CSTreeIndex files: one header-only walk collects each
-        # needed branch's basket refs in flush order; entry spans come
-        # from the v2 grid (v1: from headers)
-        cursor: dict[str, int] = {b: 0 for b in need}
-        be = meta.basket_entries
-        for k in _walk_keys(buf):
-            if k.classname != "TBasket" or k.title != meta.name or k.name not in refs:
-                continue
+    for b in need:
+        ent, seek = meta.tables[b]
+        for i, sk in enumerate(seek):
+            blo, bhi = ent[i], ent[i + 1]
+            if bhi <= start or blo >= stop:
+                continue  # pruned: header never read, payload never paged
+            if sk < FBEGIN:  # unpack_from would wrap a negative offset
+                raise ValueError(f"branch {b!r}: bad fBasketSeek {sk}")
+            k = _read_key(buf, sk)
+            if k.classname != "TBasket" or k.name != b:
+                raise ValueError(
+                    f"branch {b!r}: fBasketSeek[{i}] does not point at "
+                    f"a {b!r} TBasket (found {k.classname!r}/{k.name!r})"
+                )
             r = _BasketRef()
             r.key = k
-            r.lo = cursor[k.name]
-            if be:  # v2: span from the basket grid, payload untouched
-                r.hi = min(r.lo + be, meta.n)
-            else:  # v1 (uncompressed flat): nev from the basket header
-                _, nev = _basket_payload(buf, r, meta.letters[k.name])
-                r.hi = r.lo + nev
-            cursor[k.name] = r.hi
-            refs[k.name].append(r)
+            r.lo = blo
+            r.hi = bhi
+            refs[b].append(r)
 
     def flat_slice(b: str, lo: int, hi: int) -> np.ndarray:
         """Entries [lo, hi) of flat branch ``b`` (decodes only
@@ -1047,25 +926,6 @@ def read_tree(
             )
         out[b] = (counts, values)
     return out
-
-
-def read_flat_tree(
-    path: str,
-    tree: str | None = None,
-    branches: list[str] | None = None,
-    entry_start: int = 0,
-    entry_stop: int | None = None,
-) -> dict[str, np.ndarray]:
-    """read_tree restricted to flat branches (back-compat S1 surface);
-    requesting a jagged branch here raises ValueError."""
-    got = read_tree(path, tree, branches, entry_start, entry_stop)
-    bad = [b for b, v in got.items() if isinstance(v, tuple)]
-    if bad:
-        raise ValueError(
-            f"branches {bad} are jagged; use read_tree to get "
-            "(counts, values) pairs"
-        )
-    return got  # type: ignore[return-value]
 
 
 def read_th1f(path: str) -> dict[str, dict]:

@@ -3,13 +3,14 @@
 Real ROOT files are self-describing: the header's fSeekInfo points at a
 TKey whose payload is a TList named "StreamerInfo" holding one
 TStreamerInfo per class stored in the file, each listing its members as
-TStreamerElement records.  rootio's documented honest gap (rootio.py
-module docstring) is that its files carry a CSTreeIndex record instead;
-this module closes the gap from the WRITE side: it serializes the real
-TList / TStreamerInfo / TStreamerElement byte layout (the PUBLIC format,
-as documented by ROOT's TBufferFile semantics and independently by
-uproot's reader) so a rootio-written file can carry a genuine
-StreamerInfo record describing TTree/TBranch/TLeaf classes.
+TStreamerElement records.  This module writes that section for rootio
+(``streamers=True``): it serializes the real TList / TStreamerInfo /
+TStreamerElement byte layout (the PUBLIC format, as documented by
+ROOT's TBufferFile semantics and independently by uproot's reader) so a
+rootio-written file can carry a genuine StreamerInfo record describing
+the TTree/TBranch/TLeaf classes its tree record (sources/treeobj.py)
+streams.  rootio's reader does not need it: it reads the TTree record's
+member subset directly.
 
 Byte layout implemented (big-endian throughout):
 
@@ -46,10 +47,11 @@ HONEST SCOPE (do not over-claim): writing this record makes the file's
 metadata section real, but stock ROOT additionally requires (a) member
 checksums matching its own dictionaries (we emit fCheckSum=0 — readers
 treat a zero/foreign checksum as a schema-evolution candidate, not a
-hard error), and (b) actual TTree/TBranch object records in the file
-body, which rootio does not write (its tree metadata is the CSTreeIndex
-record).  A rootio file with streamers is therefore still NOT
-stock-ROOT loadable; what this module buys is byte-level parity of the
+hard error), and (b) TTree/TBranch object records streaming every
+member those descriptions list, where rootio's tree record streams a
+documented SUBSET (sources/treeobj.py).  A rootio file with streamers
+is therefore still NOT verified stock-ROOT loadable; what this module
+buys is byte-level parity of the
 StreamerInfo section itself, unit-tested by round-trip through the
 spec-written parser below.  Full closure stays gated on a real NanoAOD
 file to verify against (r9 VERDICT: not provable in-image).

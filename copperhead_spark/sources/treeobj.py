@@ -1,13 +1,12 @@
-"""Real TTree/TBranch/TLeaf object records (r11: retires CSTreeIndex).
+"""Real TTree/TBranch/TLeaf object records: rootio's tree metadata.
 
 The reference's stage-1 input files describe their trees with streamed
 TTree objects — a TKey of class "TTree" whose payload is the object in
 ROOT's TBufferFile layout (version headers, class tags, TNamed bases,
 and the TBranch fBasketEntry/fBasketSeek tables real readers use to
-find baskets without scanning the file).  rootio historically stored a
-private CSTreeIndex record instead (its documented honest gap,
-rootio.py:26-60 in r10); this module writes and reads the REAL record
-shape so rootio files carry genuine TTree metadata:
+find baskets without scanning the file).  This module writes and
+reads that REAL record shape; it is the only tree metadata rootio
+writes or reads:
 
 - ``tree_record(...)`` serializes a TTree v20 object: TNamed +
   TAttLine/TAttFill/TAttMarker bases, fEntries/fTotBytes/fZipBytes/
@@ -32,9 +31,8 @@ TBufferFile layout with a documented member SUBSET (the load-bearing
 members; real ROOT's TTree streams ~40 more bookkeeping fields), so
 full stock-ROOT loadability remains unverifiable in this image (needs a
 real NanoAOD file); what is proven here is that tree metadata now lives
-in real TTree/TBranch/TLeaf object records — parsed back by a reader
-that never touches CSTreeIndex — with the basket tables real readers
-navigate by.
+in real TTree/TBranch/TLeaf object records, parsed back by rootio's
+reader, with the basket tables real readers navigate by.
 
 Parity anchor: /root/reference/run_stage1.py:153-166 consumes exactly
 these records through coffea/uproot.

@@ -51,10 +51,6 @@ allocates itself.
    instead of one per worker).  Together with (2): a 32-fork storm
    dropped 9.0 -> 4.0 CPU-s, and the steady per-task floor ~3.3 -> 2.3
    CPU-s per 32-task job.
-
-Set COPPERHEAD_WORKER_LEAN=1 to skip the pre-import (e.g. for a
-non-daemon worker mode where each worker is exec'd fresh and the
-import would be paid per worker, not per executor).
 """
 
 import os
@@ -106,13 +102,12 @@ except Exception:  # noqa: BLE001
 
 # (3a) pre-import the columnar stack once per executor (daemon) so forks
 # inherit loaded modules copy-on-write instead of importing them cold.
-if os.environ.get("COPPERHEAD_WORKER_LEAN", "") != "1":
-    try:
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-        import pandas  # noqa: F401
-    except Exception:  # noqa: BLE001 - stack absent: workers import lazily
-        pass
+try:
+    import numpy  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pandas  # noqa: F401
+except Exception:  # noqa: BLE001 - stack absent: workers import lazily
+    pass
 
 # (3b) freeze the heap right before each fork: the daemon's reuse loop
 # runs gc.collect() after every task in every worker, and without the

@@ -492,8 +492,8 @@ def test_rootio_flat_tree_roundtrip_property(branch_specs, n, basket):
 
     from copperhead_spark.sources.rootio import (
         list_trees,
-        read_flat_tree,
-        write_flat_tree,
+        read_tree,
+        write_tree,
     )
 
     rng = np.random.RandomState(n * 7 + basket)
@@ -507,9 +507,9 @@ def test_rootio_flat_tree_roundtrip_property(branch_specs, n, basket):
 
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/t.root"
-        write_flat_tree(path, "Events", cols, basket_entries=basket)
+        write_tree(path, "Events", cols, basket_entries=basket)
         assert list_trees(path) == [("Events", n)]
-        back = read_flat_tree(path)
+        back = read_tree(path)
         for k, v in cols.items():
             assert back[k].dtype.kind == v.dtype.kind
             assert np.array_equal(back[k], v), k
@@ -517,7 +517,7 @@ def test_rootio_flat_tree_roundtrip_property(branch_specs, n, basket):
         lo = n // 3
         hi = min(n, lo + max(1, basket + 1))
         first = next(iter(cols))
-        win = read_flat_tree(path, "Events", [first], lo, hi)
+        win = read_tree(path, "Events", [first], lo, hi)
         assert np.array_equal(win[first], cols[first][lo:hi])
 
 
@@ -583,13 +583,13 @@ def test_rootio_reader_never_hangs_on_garbage(payload):
     struct.error no longer escapes the module's documented contract."""
     import tempfile
 
-    from copperhead_spark.sources.rootio import read_flat_tree, read_th1f
+    from copperhead_spark.sources.rootio import read_tree, read_th1f
 
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/g.root"
         with open(path, "wb") as fh:
             fh.write(payload)
-        for fn in (read_flat_tree, read_th1f):
+        for fn in (read_tree, read_th1f):
             try:
                 fn(path)
             except (ValueError, KeyError):
@@ -680,12 +680,12 @@ def test_rootio_xz_frames_and_unsupported_codecs():
     vals = np.repeat(rng.uniform(-1, 1, 50), 40)  # compressible
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/x.root"
-        rootio.write_flat_tree(
+        rootio.write_tree(
             path, "T", {"a": vals}, basket_entries=512, compress=206
         )
         raw = open(path, "rb").read()
         assert b"XZ\x00" in raw and b"ZL\x08" not in raw
-        back = rootio.read_flat_tree(path, "T", ["a"], 0, len(vals))
+        back = rootio.read_tree(path, "T", ["a"], 0, len(vals))
         assert np.array_equal(back["a"], vals)
         # relabel the XZ frame as L4: the body is not (checksum + LZ4
         # block), so the canonical-XXH64 verification must reject it
@@ -694,12 +694,12 @@ def test_rootio_xz_frames_and_unsupported_codecs():
         badpath = f"{d}/bad.root"
         open(badpath, "wb").write(bad)
         with pytest.raises(ValueError, match="checksum"):
-            rootio.read_flat_tree(badpath, "T", ["a"], 0, len(vals))
+            rootio.read_tree(badpath, "T", ["a"], 0, len(vals))
         zs = raw[:pos] + b"ZS\x01" + raw[pos + 3 :]
         zspath = f"{d}/zs.root"
         open(zspath, "wb").write(zs)
         with pytest.raises(ValueError, match="magic"):
-            rootio.read_flat_tree(zspath, "T", ["a"], 0, len(vals))
+            rootio.read_tree(zspath, "T", ["a"], 0, len(vals))
 
 
 def test_rootio_l4_frames_roundtrip_and_detect_corruption():
@@ -718,7 +718,7 @@ def test_rootio_l4_frames_roundtrip_and_detect_corruption():
     vals = np.repeat(rng.uniform(-1, 1, 60), 40)  # compressible
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/l.root"
-        rootio.write_flat_tree(
+        rootio.write_tree(
             path, "T", {"a": vals}, basket_entries=512, compress=404
         )
         raw = open(path, "rb").read()
@@ -728,7 +728,7 @@ def test_rootio_l4_frames_roundtrip_and_detect_corruption():
         stored = int.from_bytes(raw[pos + 9 : pos + 17], "big")
         block = raw[pos + 17 : pos + 9 + csize]
         assert xxh64(block) == stored  # the frame carries a REAL xxh64
-        back = rootio.read_flat_tree(path, "T", ["a"], 0, len(vals))
+        back = rootio.read_tree(path, "T", ["a"], 0, len(vals))
         assert np.array_equal(back["a"], vals)
         # flip one block byte -> checksum mismatch, never a wrong decode
         bad = bytearray(raw)
@@ -736,7 +736,7 @@ def test_rootio_l4_frames_roundtrip_and_detect_corruption():
         badpath = f"{d}/flip.root"
         open(badpath, "wb").write(bytes(bad))
         with pytest.raises(ValueError, match="checksum"):
-            rootio.read_flat_tree(badpath, "T", ["a"], 0, len(vals))
+            rootio.read_tree(badpath, "T", ["a"], 0, len(vals))
 
 
 def test_rootio_writer_rejects_bad_compress_spec():

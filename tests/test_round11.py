@@ -372,39 +372,18 @@ def test_write_tree_emits_real_ttree_record_not_cstreeindex(tmp_path):
     assert len(b["ev"]["basket_seek"]) == 4
     # the reader consumes the TTree record (seek-table path, no key walk)
     meta = rootio._tree_meta(buf, "Events")
-    assert meta.tables is not None
+    assert set(meta.tables) == {"n", "ev", "j"}
+    for name, (ent, seek) in meta.tables.items():
+        assert ent == [0, 64, 128, 192, 200]
+        assert seek == b[name]["basket_seek"]
+        for sk in seek:
+            k = rootio._read_key(buf, sk)
+            assert (k.classname, k.name, k.title) == ("TBasket", name, "Events")
     out = rootio.read_tree(p, "Events", ["j"], entry_start=65, entry_stop=130)
     c, v = out["j"]
     assert np.array_equal(c, counts[65:130])
     lo = counts[:65].sum()
     assert np.array_equal(v, vals[lo : lo + c.sum()])
-
-
-def test_reader_still_accepts_legacy_cstreeindex_files(tmp_path):
-    """Back-compat: files written before r11 carry a CSTreeIndex v2
-    record; the reader must still walk them (fall-back path)."""
-    import struct
-
-    import numpy as np
-
-    from copperhead_spark.sources import rootio
-
-    p = str(tmp_path / "legacy.root")
-    n = 100
-    a = np.arange(n, dtype=np.float64)
-    w = rootio._Writer(p, compress=6)
-    # the exact pre-r11 CSTreeIndex v2 layout
-    idx = struct.pack(">hqii", 2, n, 32, 1)
-    idx += rootio._tstring("x") + b"D" + rootio._tstring("")
-    w.add("CSTreeIndex", "Events", "", idx, compressible=False)
-    for start in range(0, n, 32):
-        stop = min(start + 32, n)
-        w.add("TBasket", "x", "Events",
-              rootio._basket_bytes(a[start:stop], "D", stop - start))
-    w.close()
-    assert rootio.list_trees(p) == [("Events", n)]
-    out = rootio.read_tree(p, "Events", ["x"], 10, 90)
-    assert np.array_equal(out["x"], a[10:90])
 
 
 def test_zstd_root_file_and_seek_pruning(tmp_path):

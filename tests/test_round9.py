@@ -171,27 +171,8 @@ def test_rootio_pruned_compressed_baskets_not_inflated(tmp_path, monkeypatch):
     assert len(calls) <= 4
 
 
-def test_rootio_v1_files_remain_readable(tmp_path):
-    """Files written by the r8 (v1 index) writer still read: synthesize
-    a v1 CSTreeIndex + header-described baskets byte-for-byte."""
-    import struct
-
-    from copperhead_spark.sources import rootio
-
-    a = np.arange(10, dtype=np.float64)
-    w = rootio._Writer(str(tmp_path / "v1.root"))
-    idx = struct.pack(">hqi", 1, 10, 1) + rootio._tstring("a") + b"D"
-    w.add(rootio._TREE_INDEX_CLASS, "T", "", idx)
-    for lo in range(0, 10, 4):
-        chunk = a[lo : lo + 4]
-        w.add("TBasket", "a", "T", rootio._basket_bytes(chunk, "D", len(chunk)))
-    w.close()
-    back = rootio.read_flat_tree(str(tmp_path / "v1.root"), "T", ["a"], 2, 9)
-    assert np.array_equal(back["a"], a[2:9])
-
-
 def test_rootio_missing_index_error_is_actionable(tmp_path):
-    """ROOT-parseable file without a CSTreeIndex -> KeyError that names
+    """ROOT-parseable file without a TTree record -> KeyError that names
     the remediation (the r8 ADVICE error-message item)."""
     from copperhead_spark.sources import rootio
 
@@ -353,7 +334,7 @@ def test_scan_entries_and_files_ingest(spark, tmp_path):
     """Distributed (path, entries) pre-scan over several ROOT files
     feeds the bare-paths ingest; values round-trip exactly and the scan
     is metadata-only (works on compressed files without inflating
-    baskets — entry counts come from the CSTreeIndex record)."""
+    baskets — entry counts come from the TTree object record)."""
     import numpy as np
 
     from copperhead_spark.sources import rootio
@@ -366,7 +347,7 @@ def test_scan_entries_and_files_ingest(spark, tmp_path):
     paths, sizes = [], [37, 101, 64]
     for i, n in enumerate(sizes):
         p = str(tmp_path / f"f{i}.root")
-        rootio.write_flat_tree(
+        rootio.write_tree(
             p,
             "Events",
             {"x": rng.uniform(-1, 1, n), "k": np.arange(n, dtype=np.int64)},

@@ -154,13 +154,13 @@ def test_read_nanoaod_default_decoder_reads_rootio_files(spark, tmp_path):
     import numpy as np
 
     from copperhead_spark.sources.root_ingest import read_nanoaod
-    from copperhead_spark.sources.rootio import list_trees, write_flat_tree
+    from copperhead_spark.sources.rootio import list_trees, write_tree
 
     files = []
     rng = np.random.RandomState(7)
     for i, n in enumerate((1000, 1537)):
         path = str(tmp_path / f"f{i}.root")
-        write_flat_tree(
+        write_tree(
             path,
             "Events",
             {
