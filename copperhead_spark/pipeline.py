@@ -13,6 +13,9 @@ Stage 1 is one path, stage1_arrays: a JVM HLT/flag filter, then the
 transcendental-free jagged front half as one Arrow/NumPy mapInArrow
 kernel (operators/stage1_kernel.py, "kernel" below), then the trig-
 bearing tail as codegen'd JVM projections (_derive_and_label, "tail").
+The tail's pair kinematics end at an evaluation barrier
+(operators/barrier.project_once) so that the region filter and weights
+above it read plain attributes: each trig call runs once per object.
 
 Reference walk-through being mirrored (paths in the reference
 copperhead repository):
@@ -37,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from copperhead_spark.operators.barrier import project_once
 from copperhead_spark.operators.histogram import histogram
 from copperhead_spark.operators.stage1_kernel import stage1_flat_arrow
 
@@ -59,28 +63,31 @@ def _p4(prefix: str, pt: str, eta: str, phi: str, mass: float | str) -> list[tup
     ]
 
 
-def _pair_kinematics(df: DataFrame, p1: str, p2: str, out: str, m1, m2) -> DataFrame:
+def _pair_columns(p1: str, p2: str, out: str, m1, m2) -> list[list[tuple[str, str]]]:
     """Invariant mass / pt / rapidity / dEta / dPhi / dR of an object pair
-    given {p}_pt/{p}_eta/{p}_phi columns."""
-    stages = [
-        _p4("_a_", f"{p1}pt", f"{p1}eta", f"{p1}phi", m1)
-        + _p4("_b_", f"{p2}pt", f"{p2}eta", f"{p2}phi", m2),
+    given {p}_pt/{p}_eta/{p}_phi columns, as four projection levels
+    (p4 -> sums -> mass/pt/rap/dEta/dPhi -> dR).  Temporaries carry the
+    ``out`` prefix so both pairs share one projection chain."""
+    a, b, q = f"_{out}a_", f"_{out}b_", f"_{out}q"
+    return [
+        _p4(a, f"{p1}pt", f"{p1}eta", f"{p1}phi", m1)
+        + _p4(b, f"{p2}pt", f"{p2}eta", f"{p2}phi", m2),
         [
-            ("_qx", "_a_px + _b_px"),
-            ("_qy", "_a_py + _b_py"),
-            ("_qz", "_a_pz + _b_pz"),
-            ("_qe", "_a_e + _b_e"),
+            (f"{q}x", f"{a}px + {b}px"),
+            (f"{q}y", f"{a}py + {b}py"),
+            (f"{q}z", f"{a}pz + {b}pz"),
+            (f"{q}e", f"{a}e + {b}e"),
         ],
         [
             # explicit NULL guard: GREATEST skips NULLs, so NULL inputs
             # (absent second jet) would otherwise turn into mass = 0.0
             (
                 f"{out}mass",
-                "IF(_qe IS NULL, CAST(NULL AS DOUBLE), "
-                "SQRT(GREATEST(_qe * _qe - _qx * _qx - _qy * _qy - _qz * _qz, 0.0)))",
+                f"IF({q}e IS NULL, CAST(NULL AS DOUBLE), "
+                f"SQRT(GREATEST({q}e * {q}e - {q}x * {q}x - {q}y * {q}y - {q}z * {q}z, 0.0)))",
             ),
-            (f"{out}pt", "SQRT(_qx * _qx + _qy * _qy)"),
-            (f"{out}rap", "0.5 * LN((_qe + _qz) / (_qe - _qz))"),
+            (f"{out}pt", f"SQRT({q}x * {q}x + {q}y * {q}y)"),
+            (f"{out}rap", f"0.5 * LN(({q}e + {q}z) / ({q}e - {q}z))"),
             (f"{out}dEta", f"{p1}eta - {p2}eta"),
             (
                 f"{out}dPhi",
@@ -94,13 +101,16 @@ def _pair_kinematics(df: DataFrame, p1: str, p2: str, out: str, m1, m2) -> DataF
             )
         ],
     ]
-    for stage in stages:
-        df = df.selectExpr("*", *[f"({e}) AS {n}" for n, e in stage])
-    return df.drop(
-        "_a_px", "_a_py", "_a_pz", "_a_e", "_b_px", "_b_py", "_b_pz", "_b_e",
-        "_qx", "_qy", "_qz", "_qe",
-    )
 
+
+# jj system: NULL for events with < 2 clean jets (the reference's
+# NaN-for-missing-jets semantics, FIXTURES.md §F2).  NULL jet2 inputs
+# propagate to NULL jj_* through the arithmetic itself, so there is no
+# filter/union split (that would execute the upstream plan twice).
+_PAIRS = (
+    ("mu1_", "mu2_", "dimuon_", MU_MASS, MU_MASS),
+    ("jet1_", "jet2_", "jj_", "jet1_mass", "jet2_mass"),
+)
 
 _MU_SF = (
     "CASE WHEN {pt} < 40 THEN 0.9712 WHEN {pt} < 80 THEN 0.9905 ELSE 0.9951 END"
@@ -111,47 +121,49 @@ def _derive_and_label(flat: DataFrame) -> DataFrame:
     """Stage-1 tail: pair kinematics, region labels, weight ledger.  The
     trig (COS/SIN/EXP/LN) stays in codegen'd JVM expressions: NumPy and
     the JVM's libm can differ in the last ulp, and the oracles that
-    consume this table compare bit for bit."""
-    flat = _pair_kinematics(flat, "mu1_", "mu2_", "dimuon_", MU_MASS, MU_MASS)
-    # jj system: NULL for events with < 2 clean jets (the reference's
-    # NaN-for-missing-jets semantics, FIXTURES.md §F2).  NULL jet2 inputs
-    # propagate to NULL jj_* through the arithmetic itself, so there is
-    # no filter/union split (that would execute the upstream plan twice).
-    flat = _pair_kinematics(flat, "jet1_", "jet2_", "jj_", "jet1_mass", "jet2_mass")
+    consume this table compare bit for bit.
 
+    The kinematics end at an evaluation barrier (``project_once``) that
+    projects only the output columns.  Without it Catalyst pushes the
+    ``region != 'none'`` filter below the kinematics projections and
+    inlines the whole ``dimuon_mass`` tree at each of the region CASE's
+    8 references (132 COS in the executed plan, 128 of them in the
+    Filter); above it, region, the filter and the weights read plain
+    attributes, and each trig call is evaluated once per object."""
+    pairs = [_pair_columns(*p) for p in _PAIRS]
+    kin = flat
+    for level in zip(*pairs):
+        kin = kin.selectExpr("*", *[f"({e}) AS {n}" for cols in level for n, e in cols])
+    # the last two levels are the outputs; the p4s and sums are not kept
+    out = [n for levels in pairs for cols in levels[2:] for n, _ in cols]
+    kin = project_once(kin, *flat.columns, *out)
+
+    mass = F.col("dimuon_mass")
     region = (
-        F.when((F.col("dimuon_mass") > 76) & (F.col("dimuon_mass") < 106), "z-peak")
-        .when((F.col("dimuon_mass") >= 115) & (F.col("dimuon_mass") < 135), "h-peak")
+        F.when((mass > 76) & (mass < 106), "z-peak")
+        .when((mass >= 115) & (mass < 135), "h-peak")
         .when(
-            ((F.col("dimuon_mass") >= 110) & (F.col("dimuon_mass") < 115))
-            | ((F.col("dimuon_mass") >= 135) & (F.col("dimuon_mass") < 150)),
+            ((mass >= 110) & (mass < 115)) | ((mass >= 135) & (mass < 150)),
             "h-sidebands",
         )
         .otherwise("none")
     )
-    wgt = (
-        F.col("genWeight")
-        * F.expr(_MU_SF.format(pt="mu1_pt"))
-        * F.expr(_MU_SF.format(pt="mu2_pt"))
+    labeled = kin.withColumn("region", region).filter(F.col("region") != "none")
+    # one SF per muon; the three weights reference it (CollapseProject
+    # does not re-inline a CASE consumed more than once)
+    sf = labeled.select(
+        "*",
+        F.expr(_MU_SF.format(pt="mu1_pt")).alias("_sf1"),
+        F.expr(_MU_SF.format(pt="mu2_pt")).alias("_sf2"),
     )
+    gw, sf1, sf2 = F.col("genWeight"), F.col("_sf1"), F.col("_sf2")
     # systematic variations: SF coherently shifted +/-1% per muon
     # (lepton_sf.py up/down errs; weights.py:37-47 'all' semantics)
-    wgt_up = (
-        F.col("genWeight")
-        * (F.expr(_MU_SF.format(pt="mu1_pt")) * 1.01)
-        * (F.expr(_MU_SF.format(pt="mu2_pt")) * 1.01)
-    )
-    wgt_down = (
-        F.col("genWeight")
-        * (F.expr(_MU_SF.format(pt="mu1_pt")) * 0.99)
-        * (F.expr(_MU_SF.format(pt="mu2_pt")) * 0.99)
-    )
-    return (
-        flat.withColumn("region", region)
-        .filter(F.col("region") != "none")
-        .withColumn("wgt_nominal", wgt)
-        .withColumn("wgt_muid_up", wgt_up)
-        .withColumn("wgt_muid_down", wgt_down)
+    return sf.select(
+        *labeled.columns,
+        (gw * sf1 * sf2).alias("wgt_nominal"),
+        (gw * (sf1 * 1.01) * (sf2 * 1.01)).alias("wgt_muid_up"),
+        (gw * (sf1 * 0.99) * (sf2 * 0.99)).alias("wgt_muid_down"),
     )
 
 

@@ -153,8 +153,9 @@ def _zl_frames(data: bytes, level: int, alg: int = 1) -> bytes | None:
             from copperhead_spark.sources.zstdcodec import zstd_compress
 
             # one zstd frame per chunk (ZipZSTD.cxx layout); the ROOT
-            # 9-byte frame carries the sizes, so no frame checksum
-            c = zstd_compress(chunk, checksum=False)
+            # 9-byte header carries only sizes, so the frame carries its
+            # XXH64 content checksum, which zstd_decompress verifies
+            c = zstd_compress(chunk, checksum=True)
             head = b"ZS" + bytes([1])
         elif alg == 4:
             from copperhead_spark.sources.lz4codec import (

@@ -237,17 +237,119 @@ def test_stage1_partitioned_sink_roundtrip(flat_and_ref, spark, tmp_path):
 def test_stage1_arrays_plan_shape(spark):
     """Scale invariants of the stage-1 plan: no Exchange before the
     stage-2 histogram (the single shuffle), exactly ONE Python crossing
-    (the Arrow kernel), and no array HOF sort left in the JVM."""
+    (the Arrow kernel), and no array HOF sort left in the JVM.  Each
+    trig call appears once per object (4 objects: 2 muons, 2 jets, with
+    2 EXP each for sinh) and the region Filter reads plain attributes:
+    without the tail's evaluation barrier Catalyst pushed the filter
+    below the kinematics and inlined dimuon_mass at each of its 8
+    references (132 COS, 128 of them in the Filter).  The muon SF CASE
+    is evaluated once per muon, not once per weight."""
+    import re
+
     from copperhead_spark.pipeline import stage2_variations
 
-    ev = events_fixture(spark, 200, SEED)
-    plan = (
-        stage2_variations(stage1_arrays(ev))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    key = "spark.sql.debug.maxToStringFields"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "10000")
+    try:
+        ev = events_fixture(spark, 200, SEED)
+        plan = (
+            stage2_variations(stage1_arrays(ev))
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
     assert plan.count("Exchange") == 1, plan.count("Exchange")
     assert plan.count("MapInArrow") == 1, plan.count("MapInArrow")
     assert "array_sort" not in plan
+    trig = {f: plan.count(f"{f}(") for f in ("COS", "SIN", "EXP")}
+    assert trig == {"COS": 4, "SIN": 4, "EXP": 8}, trig
+    filters = [ln for ln in plan.splitlines() if "Filter " in ln]
+    assert filters and not any(
+        f"{f}(" in ln for ln in filters for f in ("COS", "SIN", "EXP", "SQRT", "LN")
+    ), filters
+    sf = re.findall(r"CASE WHEN \(mu([12])_pt#\d+ < 40", plan)
+    assert sorted(sf) == ["1", "2"], sf
+
+
+# name, type, nullable of the 44 stage-1 output columns
+STAGE1_SCHEMA = (
+    [("event", "bigint"), ("run", "bigint"), ("genWeight", "double"),
+     ("MET_pt", "double"), ("Pileup_nTrueInt", "double"), ("nmuons", "bigint"),
+     ("mm_charge", "int")]
+    + [(f"mu{i}_{c}", t) for i in (1, 2)
+       for c, t in (("pt", "double"), ("eta", "double"), ("phi", "double"),
+                    ("charge", "int"), ("pfRelIso04_all", "double"))]
+    + [("njets", "bigint")]
+    + [(f"jet{i}_{c}", "double") for i in (1, 2)
+       for c in ("pt", "eta", "phi", "mass", "qgl")]
+    + [(f"{p}_{v}", "double") for p in ("dimuon", "jj")
+       for v in ("mass", "pt", "rap", "dEta", "dPhi", "dR")]
+    + [("region", "string")]
+    + [(f"wgt_{v}", "double") for v in ("nominal", "muid_up", "muid_down")]
+)
+
+
+def _schema_triples(df):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+
+
+def test_stage1_arrow_kernel_null_jets(spark):
+    """jet1_*/jet2_* must be NULL (not NaN, not 0) when njets < 1/2, and
+    so must every jj_* when njets < 2 — Spark treats NaN > x as TRUE, so
+    a NaN leak would flip the vbf channel cascade.  The F1 fixture's
+    survivors always carry >= 2 clean jets, so this uses a hand-built
+    0/1/2-jet fixture, plus the inputs that must yield NO row (one muon,
+    no muons, a same-sign pair), an empty frame, and partitions with no
+    survivors: each gives the right row count under the full schema
+    (names, types and nullability through the tail's barrier)."""
+    from copperhead_spark.fixtures import EVENT_SCHEMA
+
+    mu = [(50.0, 0.5, 0.1, 1, 0.1, True, -1),
+          (40.0, -0.5, 2.0, -1, 0.1, True, -1)]
+    same_sign = [mu[0], (40.0, -0.5, 2.0, 1, 0.1, True, -1)]
+    jet = (120.0, 3.0, -2.0, 10.0, 2, 0.5)
+    jet2 = (80.0, -3.0, 1.0, 8.0, 6, 0.2)
+
+    def row(event, muons, jets):
+        return (1, event, 1.0, True, True, 30.0, 20.0, muons, jets, [])
+
+    rows = [
+        row(100, mu, []),
+        row(101, mu, [jet]),
+        row(102, mu, [jet, jet2]),
+        row(103, mu[:1], [jet, jet2]),
+        row(104, [], [jet, jet2]),
+        row(105, same_sign, [jet, jet2]),
+    ]
+    ev = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
+    want = [(n, t, n != "region") for n, t in STAGE1_SCHEMA]
+    out = stage1_arrays(ev)
+    assert _schema_triples(out) == want
+    got = sorted(out.collect(), key=lambda r: r.event)
+    assert [r.event for r in got] == [100, 101, 102]
+    assert [r.njets for r in got] == [0, 1, 2]
+    jj = [n for n, _ in STAGE1_SCHEMA if n.startswith("jj_")]
+    for r in got[:2]:  # < 2 clean jets: NULL, not 0.0 and not NaN
+        assert all(r[c] is None for c in jj), r.asDict()
+    assert all(r[c] is None for c in ("jet1_pt", "jet2_pt", "jet1_qgl")
+               for r in got[:1])
+    assert got[1].jet1_pt == 120.0
+    assert got[1].jet2_pt is None and got[1].jet2_mass is None
+    assert got[2].jet1_pt == 120.0 and got[2].jet2_pt == 80.0
+    assert all(math.isfinite(got[2][c]) for c in jj)
+
+    empty = stage1_arrays(spark.createDataFrame([], schema=EVENT_SCHEMA))
+    assert _schema_triples(empty) == want and empty.count() == 0
+
+    # 8 partitions over 6 events: some are empty, others hold only
+    # events the kernel drops
+    spread = stage1_arrays(ev.repartition(8, "event"))
+    assert _schema_triples(spread) == want
+    assert sorted(spread.collect(), key=lambda r: r.event) == got
 
 
 def test_distributed_fixture_feeds_pipeline(spark):

@@ -72,15 +72,12 @@ def test_every_strict_prefix_raises_named_error(tmp_path, frame):
             rootio.read_tree(cut, "Events")
 
 
-# ZS is left out: ROOT's ZipZSTD frames carry no zstd checksum (the
-# writer follows it, `_zl_frames` passes checksum=False), so a flipped
-# literal byte decodes to different values that nothing can detect.
-@pytest.mark.parametrize("frame", ["L4", "XZ", "ZL"])
+@pytest.mark.parametrize("frame", sorted(_CODECS))
 def test_every_flipped_frame_byte_decodes_or_raises(tmp_path, frame):
     """Inverting any single byte of one jagged basket's compression frame
     (9-byte header or body) either still decodes to the original arrays
-    or raises ValueError: ZL frames carry adler32, XZ a CRC and L4 an
-    XXH64 of the block."""
+    or raises ValueError: ZL frames carry adler32, XZ a CRC, L4 an XXH64
+    of the block and ZS a zstd content checksum (XXH64)."""
     path = str(tmp_path / "f.root")
     counts, values = _jagged_file(path, _CODECS[frame])
     buf = rootio._open_buf(path)

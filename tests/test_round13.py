@@ -69,58 +69,6 @@ def test_no_reevaluated_expensive_subtrees(spark, name, max_py, max_scans):
     )
 
 
-def test_stage1_arrow_kernel_null_jets(spark):
-    """jet1_*/jet2_* must be NULL (not NaN, not 0) when njets < 1/2 —
-    Spark treats NaN > x as TRUE, so a NaN leak would flip the vbf
-    channel cascade.  The F1 fixture's survivors always carry >= 2 clean
-    jets, so this uses a hand-built 0/1/2-jet fixture, plus the inputs
-    that must yield NO row (one muon, no muons, a same-sign pair), an
-    empty frame, and partitions with no survivors: each gives the right
-    row count under the full schema."""
-    import pandas as pd
-
-    from copperhead_spark.fixtures import EVENT_SCHEMA
-    from copperhead_spark.pipeline import stage1_arrays
-
-    mu = [(50.0, 0.5, 0.1, 1, 0.1, True, -1),
-          (40.0, -0.5, 2.0, -1, 0.1, True, -1)]
-    same_sign = [mu[0], (40.0, -0.5, 2.0, 1, 0.1, True, -1)]
-    jet = (120.0, 3.0, -2.0, 10.0, 2, 0.5)
-    jet2 = (80.0, -3.0, 1.0, 8.0, 6, 0.2)
-
-    def row(event, muons, jets):
-        return (1, event, 1.0, True, True, 30.0, 20.0, muons, jets, [])
-
-    rows = [
-        row(100, mu, []),
-        row(101, mu, [jet]),
-        row(102, mu, [jet, jet2]),
-        row(103, mu[:1], [jet, jet2]),
-        row(104, [], [jet, jet2]),
-        row(105, same_sign, [jet, jet2]),
-    ]
-    ev = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
-    flat = (stage1_arrays(ev).toPandas()
-            .sort_values("event").reset_index(drop=True))
-    assert len(flat.columns) == 44
-    assert list(flat.event) == [100, 101, 102]
-    assert list(flat.njets) == [0, 1, 2]
-    assert flat.loc[0, ["jet1_pt", "jet2_pt", "jet1_qgl"]].isna().all()
-    assert flat.loc[1, "jet1_pt"] == 120.0 and flat.loc[
-        1, ["jet2_pt", "jet2_mass"]].isna().all()
-    assert flat.loc[2, "jet1_pt"] == 120.0 and flat.loc[2, "jet2_pt"] == 80.0
-
-    empty = stage1_arrays(
-        spark.createDataFrame([], schema=EVENT_SCHEMA)).toPandas()
-    assert list(empty.columns) == list(flat.columns) and len(empty) == 0
-
-    # 8 partitions over 6 events: some are empty, others hold only
-    # events the kernel drops
-    spread = (stage1_arrays(ev.repartition(8, "event")).toPandas()
-              .sort_values("event").reset_index(drop=True))
-    pd.testing.assert_frame_equal(spread, flat)
-
-
 def test_lsh_pairs_values_unchanged(spark):
     """The explode-banding reshape must emit exactly the union form's
     rows (order-insensitive: the downstream groupBy aggregates them)."""

@@ -42,7 +42,7 @@ INVENTORY: list[tuple[str, str, list[str], str]] = [
     ("P5", "CASE-WHEN region labeling", ["p5_case_region_label", "flagship_selection_yield"], "pipeline.py _derive_and_label (stage-1 region labels)"),
     ("P6", "Ordered CASE-WHEN channel cascade", ["p6_channel_cascade"], "pipeline.py stage2"),
     ("P7", "Membership / fold filter", ["p7_membership_fold"], ""),
-    ("P8", "Derived-column projection (wide)", ["phys_p4_kinematics", "phys_delta_r", "phys_geofit_piecewise"], "pipeline.py _pair_kinematics (~25 derived cols)"),
+    ("P8", "Derived-column projection (wide)", ["phys_p4_kinematics", "phys_delta_r", "phys_geofit_piecewise"], "pipeline.py _pair_columns (12 dimuon/jj pair cols in one shared projection chain, ended by a project_once evaluation barrier before the region filter)"),
     ("P9", "Column subsetting & renaming on save", ["p9_select_rename_flatten"], ""),
     ("P10", "Null handling / sentinel fill", ["j11_aggregate_back_join"], "coalesce/fillna; pipeline NULL jj semantics tested"),
     ("P11", "Dataset relabel split", ["p11_dataset_relabel_split"], ""),
